@@ -191,18 +191,15 @@ object EnaMain {
     val metrics = Some(SegMetrics(spark.sparkContext))
     // regime selection: a driver-collected broadcast map only pays off
     // while it is small (the collect + map build is driver-serial);
-    // past the threshold the declarative shuffle join wins. Override
-    // with ENA_BROADCAST=0/1.
+    // past the threshold the declarative shuffle join wins. The bounded
+    // probe decides; SPARK_GRAFT_FORCE_DISTRIBUTED=1 makes it pick the
+    // shuffle join (graft.Regimes).
     val maxBroadcastRows =
       sys.env.getOrElse("ENA_BROADCAST_MAX_ROWS", "1000000").toLong
     val maxBroadcastBytes =
       sys.env.getOrElse("ENA_BROADCAST_MAX_BYTES", (256L << 20).toString).toLong
-    val broadcastIdMap = sys.env.get("ENA_BROADCAST") match {
-      case Some("0") => false
-      case Some("1") => true
-      case _ =>
-        chooseBroadcastRegime(idmapping, maxBroadcastRows, maxBroadcastBytes)
-    }
+    val broadcastIdMap =
+      chooseBroadcastRegime(idmapping, maxBroadcastRows, maxBroadcastBytes)
     val t0 = System.nanoTime()
     val enaTab = EnaPipeline.enaTab(spark, roots, idmapping,
       broadcastIdMap = broadcastIdMap, metrics = metrics)

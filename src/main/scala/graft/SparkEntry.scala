@@ -25,4 +25,48 @@ object SparkEntry {
     * the driver sorts columns by name before hashing). */
   def oracleSql: Map[String, String] =
     graft.queries.QueryPack.oracleSql ++ graft.queries.QueryPackExt.oracleSql
+
+  /** The queries named in `only` (a comma-separated list, as in
+    * SPARK_GRAFT_ONLY, surrounding spaces allowed), or every query when
+    * `only` is None; second, the names that match no query.
+    */
+  def select(only: Option[String])
+      : (Map[String, (SparkSession, String) => DataFrame], Seq[String]) =
+    only match {
+      case None => (queries, Nil)
+      case Some(list) =>
+        val names = list.split(",").map(_.trim).filter(_.nonEmpty).distinct
+        val (known, unknown) = names.partition(queries.contains)
+        (known.map(n => n -> queries(n)).toMap, unknown.toSeq)
+    }
+
+  /** [[select]] for the Bench and Verify mains: warns on each unknown
+    * name, and exits with status 2 when nothing matches, since a silent
+    * empty run reads as a near-zero suite time or an empty dump.
+    */
+  def selectOrExit(only: Option[String])
+      : Map[String, (SparkSession, String) => DataFrame] = {
+    val (selected, unknown) = select(only)
+    unknown.foreach(n => System.err.println(
+      s"WARNING: SPARK_GRAFT_ONLY name '$n' matches no registered query"))
+    if (selected.isEmpty) {
+      System.err.println("ERROR: SPARK_GRAFT_ONLY matched zero queries")
+      sys.exit(2)
+    }
+    selected
+  }
+
+  /** `s` as a JSON string literal. Every control character is escaped:
+    * a raw tab or CR in query SQL or an error message would otherwise
+    * make the reader's JSON parse fail.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -6,13 +6,16 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev-loop filter: SPARK_GRAFT_ONLY=q30_x,q31_y runs a subset
+    // (the driver sets nothing, so its runs always dump everything)
+    val selected = SparkEntry.selectOrExit(sys.env.get("SPARK_GRAFT_ONLY"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       // see Bench: let bytesPerCore, not the 4 MiB open-cost floor, size
       // file splits — small-SF tables otherwise scan as 1-3 partitions.
-      // NO fan-out/layout rewrite here: correctness runs keep the exact
+      // NO layout rewrite here: correctness runs keep the exact
       // r6-proven read path (aggregation order stays stable vs the
       // oracle; Verify wall time isn't graded).
       .config("spark.sql.files.openCostInBytes", "65536")
@@ -31,12 +34,6 @@ object Verify {
         "[verify] FORCED DISTRIBUTED REGIMES: union-find/InSet/" +
           "single-window/broadcast-resolve fast paths disabled")
     new java.io.File(outDir).mkdirs()
-    // dev-loop filter: SPARK_GRAFT_ONLY=q30_x,q31_y runs a subset
-    // (the driver sets nothing, so its runs always dump everything)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -47,20 +44,9 @@ object Verify {
       // must not stay pinned while the remaining ~70 queries run
       graft.operators.Checkpoints.releaseLeaked(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.oracleSql.map { case (k, v) =>
+      s"${SparkEntry.jsonString(k)}: ${SparkEntry.jsonString(v)}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

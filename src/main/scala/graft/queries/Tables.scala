@@ -11,19 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * bench pays hundreds of times for identical answers. Keyed by
   * (session, path) so test suites with multiple sessions never share a
   * relation across sessions.
-  *
-  * Small-scan fan-out (opt-in via `spark.graft.harness.fanOutSmallScans`
-  * on the session, set by the Bench/Verify mains): a parquet ROW GROUP
-  * is the atomic scan unit, and the local test tables are single-row-
-  * group files — so every scan stage, plus everything codegen fuses
-  * into it (tokenize/hash/explode projections, broadcast-join probes),
-  * runs as ONE task regardless of split settings. A vector engine
-  * redistributes scanned batches across worker threads automatically
-  * (morsel-driven parallelism); the explicit `repartition(cores)` here
-  * is the same move, paid once per query as one exchange of the tiny
-  * table. Gated on observed scan parallelism, so against production
-  * tables (many row groups / many files) it is a structural no-op, and
-  * OFF by default so plan-shape tests see the raw scan.
   */
 private[queries] object Tables {
   private val cache = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
@@ -61,17 +48,7 @@ private[queries] object Tables {
   def parquet(s: SparkSession, path: String): DataFrame = {
     watch(s)
     cache.computeIfAbsent((s, path), { case (sess, p) =>
-      val raw = sess.read.parquet(p)
-      val fanOut = sess.conf
-        .getOption("spark.graft.harness.fanOutSmallScans").contains("true")
-      // NOTE: no "already parallel?" probe — split count lies (a 32-way
-      // byte-range split of a single-row-group file yields 31 EMPTY
-      // partitions; only the split holding the row-group start produces
-      // rows), and row-group layout isn't visible from the plan. The
-      // flag is only ever set by the local Bench/Verify mains, so the
-      // unconditional exchange is confined to the small-SF harness.
-      if (fanOut) raw.repartition(sess.sparkContext.defaultParallelism)
-      else raw
+      sess.read.parquet(p)
     })
   }
 }

@@ -1,7 +1,7 @@
-// Shared session sizing for the scratch measurement mains in tools/.
-// These ship in the artifact (they back BASELINE.md numbers), so they
-// must not hard-pin local[32]: on a smaller machine that oversubscribes
-// the host and skews every measurement (r14 ADVICE). Default is the
+// Shared session master for the mains in tools/ (data generators,
+// the q115 oracle pin, the single-query profiler). They must not
+// hard-pin local[32]: on a smaller machine that oversubscribes the
+// host and skews every measurement (r14 ADVICE). Default is the
 // host's own core count; set GRAFT_TOOL_MASTER (e.g. "local[32]") to
 // reproduce a committed number at its original parallelism.
 package graft

@@ -287,8 +287,7 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
         val t = truth(k).toLong
         assert(est >= t && est - err <= t, s"$k: est=$est err=$err true=$t")
       }
-      // bounded-state tripwire (the HhStateScale claim, permanently
-      // gated): state is ONE sketch row per open window — never a row
+      // bounded-state tripwire (permanently gated): state is ONE sketch row per open window — never a row
       // per token or per event. 22 distinct tokens and 3 micro-batches
       // ran through 2 open windows (hour 0 and the hour-3 advancer).
       val st = q.lastProgress.stateOperators.head
