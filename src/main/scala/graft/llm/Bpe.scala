@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** Byte-pair encoding with a REAL merge table — true token counts for
   * cost estimation, not just the pre-tokenization of
@@ -293,8 +294,8 @@ object Bpe {
     *    vocabulary-sized keyed pair-count aggregate (map-side
     *    partials), a bounded top-k collect, and one UDF pass applying
     *    a provably-sequential BATCH of disjoint merges (see
-    *    [[trainDistributed]]), with per-round localCheckpoint +
-    *    superseded-block release (the CC loop convention) — rounds
+    *    [[trainDistributed]]), with a per-round fence and
+    *    superseded-round release (the CC loop convention) — rounds
     *    scale as ~nMerges/256, not nMerges.
     * Both regimes share [[mergePieces]] and the tie-break, and the
     * regime-equivalence spec pins them identical on a chained-merge
@@ -423,98 +424,95 @@ object Bpe {
       nMerges: Int,
       minPairCount: Long): Seq[(String, String, Long)] = {
     import spark.implicits._
-    var words = hist.as[(String, Long)]
-      .map { case (w, c) => (codePointPieces(w).toArray, c) }
-      .toDF("pieces", "c")
-      .localCheckpoint()
-    val acc = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
-    lastDistributedRounds = 0
-    var done = false
-    while (acc.length < nMerges && !done) {
-      lastDistributedRounds += 1
-      val want = math.min(nMerges - acc.length, DistributedBatchCap)
-      val k = want + 1 // +1: the first unaccepted row supplies the strict bound
-      val len = greatest(size(col("pieces")) - 1, lit(0))
-      val cand = words
-        .select(explode(zip_with(
-          slice(col("pieces"), lit(1), len),
-          slice(col("pieces"), lit(2), len),
-          (x, y) => struct(x.as("a"), y.as("b")))).as("p"), col("c"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("c")).as("cnt"))
-        .orderBy(col("cnt").desc, col("a"), col("b"))
-        .limit(k).collect()
-      if (cand.isEmpty || cand(0).getLong(2) < minPairCount) done = true
-      else {
-        // contiguous disjoint prefix; `created` additionally fences
-        // candidates that reference or re-create a token another batch
-        // member creates — a batch member's merged token must be fresh
-        // in every sense, or applying earlier members could ADD count
-        // to a pair the stale rank order placed lower (the r14 review
-        // finding: symbol disjointness alone doesn't see string-level
-        // token collisions)
-        val syms = scala.collection.mutable.HashSet[String]()
-        val created = scala.collection.mutable.HashSet[String]()
-        var batch = Vector.empty[(String, String, Long)]
-        var i = 0
-        var scanning = true
-        while (scanning && i < cand.length && batch.length < want) {
-          val (a, b, cnt) =
-            (cand(i).getString(0), cand(i).getString(1), cand(i).getLong(2))
-          if (cnt < minPairCount || syms.contains(a) || syms.contains(b) ||
-              created.contains(a) || created.contains(b) ||
-              created.contains(a + b))
-            scanning = false
-          else {
-            batch :+= ((a, b, cnt)); syms += a; syms += b
-            created += (a + b); i += 1
+    Checkpoints.scoped { s =>
+      var words = s.fence(hist.as[(String, Long)]
+        .map { case (w, c) => (codePointPieces(w).toArray, c) }
+        .toDF("pieces", "c"))
+      val acc = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
+      lastDistributedRounds = 0
+      var done = false
+      while (acc.length < nMerges && !done) {
+        lastDistributedRounds += 1
+        val want = math.min(nMerges - acc.length, DistributedBatchCap)
+        val k = want + 1 // +1: the first unaccepted row supplies the strict bound
+        val len = greatest(size(col("pieces")) - 1, lit(0))
+        val cand = words
+          .select(explode(zip_with(
+            slice(col("pieces"), lit(1), len),
+            slice(col("pieces"), lit(2), len),
+            (x, y) => struct(x.as("a"), y.as("b")))).as("p"), col("c"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("c")).as("cnt"))
+          .orderBy(col("cnt").desc, col("a"), col("b"))
+          .limit(k).collect()
+        if (cand.isEmpty || cand(0).getLong(2) < minPairCount) done = true
+        else {
+          // contiguous disjoint prefix; `created` additionally fences
+          // candidates that reference or re-create a token another batch
+          // member creates — a batch member's merged token must be fresh
+          // in every sense, or applying earlier members could ADD count
+          // to a pair the stale rank order placed lower (the r14 review
+          // finding: symbol disjointness alone doesn't see string-level
+          // token collisions)
+          val syms = scala.collection.mutable.HashSet[String]()
+          val created = scala.collection.mutable.HashSet[String]()
+          var batch = Vector.empty[(String, String, Long)]
+          var i = 0
+          var scanning = true
+          while (scanning && i < cand.length && batch.length < want) {
+            val (a, b, cnt) =
+              (cand(i).getString(0), cand(i).getString(1), cand(i).getLong(2))
+            if (cnt < minPairCount || syms.contains(a) || syms.contains(b) ||
+                created.contains(a) || created.contains(b) ||
+                created.contains(a + b))
+              scanning = false
+            else {
+              batch :+= ((a, b, cnt)); syms += a; syms += b
+              created += (a + b); i += 1
+            }
           }
+          // Freshness probe: truncate the batch at the first member whose
+          // merged token ALREADY EXISTS in the vocabulary — merging onto
+          // an existing token string would boost that token's pairs above
+          // the stale ranks. (Under global-rank sequential BPE a string's
+          // creating pair appears to be unique — competing decompositions
+          // need contradictory rank orders — so this probe should never
+          // fire on organic corpora; it is one bounded filtered-distinct
+          // job per multi-merge round, cheap insurance over an unproven
+          // impossibility.) The batch head is always safe: it is the true
+          // argmax regardless, and the next round recounts.
+          if (batch.length > 1) {
+            val toks = batch.map { case (a, b, _) => a + b }
+            val existing = words
+              .select(explode(col("pieces")).as("__p"))
+              .filter(col("__p").isInCollection(toks))
+              .distinct().collect().map(_.getString(0)).toSet
+            val cut = batch.indexWhere { case (a, b, _) => existing(a + b) }
+            if (cut >= 0) batch = batch.take(math.max(cut, 1))
+          }
+          // strict-count bound: the first non-accepted candidate in rank
+          // order (the batch is always a rank-contiguous prefix, so that
+          // is cand(m)). m == cand.length only when the pair table is
+          // EXHAUSTED below k rows (batch.length < want = k-1 keeps
+          // m < k, so a full k-row collect always leaves cand(m) as the
+          // bound row) — no unseen pair exists, the bound is vacuous.
+          val m = batch.length
+          val bound =
+            if (m < cand.length) cand(m).getLong(2)
+            else Long.MinValue
+          while (batch.length > 1 && batch.last._3 <= bound)
+            batch = batch.init
+          acc ++= batch
+          val merges = batch.map { case (a, b, _) => (a, b) }
+          val applyMerges = udf((ps: Seq[String]) =>
+            merges.foldLeft(ps.toVector) { case (p, (a, b)) =>
+              mergePieces(p, a, b)
+            })
+          words = s.advance(words)(w => s.fence(
+            w.select(applyMerges(col("pieces")).as("pieces"), col("c"))))
         }
-        // Freshness probe: truncate the batch at the first member whose
-        // merged token ALREADY EXISTS in the vocabulary — merging onto
-        // an existing token string would boost that token's pairs above
-        // the stale ranks. (Under global-rank sequential BPE a string's
-        // creating pair appears to be unique — competing decompositions
-        // need contradictory rank orders — so this probe should never
-        // fire on organic corpora; it is one bounded filtered-distinct
-        // job per multi-merge round, cheap insurance over an unproven
-        // impossibility.) The batch head is always safe: it is the true
-        // argmax regardless, and the next round recounts.
-        if (batch.length > 1) {
-          val toks = batch.map { case (a, b, _) => a + b }
-          val existing = words
-            .select(explode(col("pieces")).as("__p"))
-            .filter(col("__p").isInCollection(toks))
-            .distinct().collect().map(_.getString(0)).toSet
-          val cut = batch.indexWhere { case (a, b, _) => existing(a + b) }
-          if (cut >= 0) batch = batch.take(math.max(cut, 1))
-        }
-        // strict-count bound: the first non-accepted candidate in rank
-        // order (the batch is always a rank-contiguous prefix, so that
-        // is cand(m)). m == cand.length only when the pair table is
-        // EXHAUSTED below k rows (batch.length < want = k-1 keeps
-        // m < k, so a full k-row collect always leaves cand(m) as the
-        // bound row) — no unseen pair exists, the bound is vacuous.
-        val m = batch.length
-        val bound =
-          if (m < cand.length) cand(m).getLong(2)
-          else Long.MinValue
-        while (batch.length > 1 && batch.last._3 <= bound)
-          batch = batch.init
-        acc ++= batch
-        val merges = batch.map { case (a, b, _) => (a, b) }
-        val applyMerges = udf((ps: Seq[String]) =>
-          merges.foldLeft(ps.toVector) { case (p, (a, b)) =>
-            mergePieces(p, a, b)
-          })
-        val next = words
-          .select(applyMerges(col("pieces")).as("pieces"), col("c"))
-          .localCheckpoint()
-        graft.operators.Checkpoints.release(words)
-        words = next
       }
+      acc.toSeq
     }
-    graft.operators.Checkpoints.release(words)
-    acc.toSeq
   }
 }

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** The end-to-end training-data curation flagship: the single operator
   * a corpus owner actually runs, chaining the curation pillars in the
@@ -66,7 +67,7 @@ object Curation {
     // stage's full gram pipeline (isolated best-of-2 A/B at sf0.1:
     // 18.6 s without → 6.9 s with — the composition costs ≈ the sum
     // of its stages). The barrier itself is dual-regime
-    // ([[keepFilter]]): the id list always localCheckpoints once (so
+    // ([[keepFilter]]): the id list always fences once (so
     // the stage pipeline runs exactly once), then a bounded probe
     // either inlines it as an InSet codegen filter (checkpoint
     // released, no broadcast-build job per consumer) or keeps it for
@@ -105,7 +106,7 @@ object Curation {
   private val InlineKeepListMaxBytes = 4L << 20
 
   /** Dual-regime stage barrier (r12, the resolveIds/J1 probe pattern;
-    * r13 materialize-once). `keepIds` is localCheckpointed FIRST, so
+    * r13 materialize-once). `keepIds` is fenced FIRST, so
     * the upstream stage's pipeline executes exactly once — the bounded
     * probe and whichever consumer wins both read the checkpoint (the
     * r12 cut probed the live plan, which ran the stage pipeline for
@@ -124,31 +125,26 @@ object Curation {
     // enforced here as well as in the default, so explicit caller
     // values cannot re-enable the inline cut in forced oracle runs
     val effMax = if (graft.Regimes.forceDistributed) 0 else maxInline
-    // LAZY checkpoint + ONE fused materialize-and-probe job (r22,
-    // guide §1.5/§2.4; the r21 form ran a count job and then a collect
-    // job). [[graft.operators.Checkpoints.countAndCollect]] drains
-    // every partition — completing the checkpoint exactly like the
-    // eager path — and ships the bounded id list back with the counts,
-    // so the inline regime pays ONE driver round trip per barrier.
-    // Jobs per barrier: inline 2 → 1, overflow 1 (unchanged — the
-    // join's first consumer materializes); the stage pipeline still
-    // executes exactly once.
-    val ck = keepIds.localCheckpoint(eager = false)
-    if (effMax > 0) {
-      val (n, probe) = graft.operators.Checkpoints.countAndCollect(ck, effMax)
-      if (n <= effMax) {
-        val idBytes = probe.foldLeft(0L)((acc, r) => acc + (r.get(0) match {
-          case s: String => 40L + 2L * s.length // object header + char payload
-          case _         => 16L                 // boxed numeric
-        }))
-        if (idBytes <= InlineKeepListMaxBytes) {
-          graft.operators.Checkpoints.release(ck)
-          return corpus.filter(
-            col("doc_id").isInCollection(probe.toSeq.map(_.get(0))))
+    // lazy fence + ONE probe job: the inline regime pays one driver
+    // round trip per barrier, the overflow regime none (the join's
+    // first consumer materializes); the stage pipeline still executes
+    // exactly once
+    Checkpoints.scoped { s =>
+      val ck = s.lazyFence(keepIds)
+      val inline =
+        if (effMax <= 0) None
+        else Checkpoints.probe(ck, effMax).filter { ids =>
+          ids.foldLeft(0L)((acc, r) => acc + (r.get(0) match {
+            case id: String => 40L + 2L * id.length // object header + char payload
+            case _          => 16L                  // boxed numeric
+          })) <= InlineKeepListMaxBytes
         }
+      inline match {
+        case Some(ids) =>
+          corpus.filter(col("doc_id").isInCollection(ids.toSeq.map(_.get(0))))
+        case None => corpus.join(ck, Seq("doc_id"))
       }
     }
-    corpus.join(ck, Seq("doc_id"))
   }
 
   /** Order-independent corpus digest per `by` group: `bit_xor` over
@@ -392,8 +388,8 @@ object Curation {
         increment.select(lit(1).as("__slice"), col("doc_id"), col("text")))
       .unionByName(
         evalDocs.select(lit(2).as("__slice"), col("doc_id"), col("text")))
-    val allSets = TextDedup.shingleSetsTagged(tagged, shingleK, "__slice")
-      .localCheckpoint(eager = false)
+    val allSets = Checkpoints.lazyFence(
+      TextDedup.shingleSetsTagged(tagged, shingleK, "__slice"))
     def slice(n: Int): DataFrame =
       allSets.filter(col("__slice") === n).drop("__slice")
     val sets = slice(0) // history posting arrays
@@ -403,7 +399,7 @@ object Curation {
     // means the second and third reads touch increment-sized blocks
     // instead of re-filtering the full union (r22; measured the
     // remaining task-time cost of the shared frame)
-    val incS = slice(1).localCheckpoint(eager = false)
+    val incS = Checkpoints.lazyFence(slice(1))
     val buckets = TextDedup.bucketsFromSets(sets, nHashes = 12, bands = 4,
       maxBucketWidth = None, checkpointSignatures = false)
     val incB = TextDedup.bucketsFromSets(incS, nHashes = 12, bands = 4,
@@ -428,13 +424,13 @@ object Curation {
       increment.select(col("doc_id")), incG, evalG, gramDf = Some(histDf))
       .select(col("doc_id"), col("n_grams"), col("overlap"),
         col("mean_seen"))
-    // `flags` is localCheckpointed: BOTH consumers below (the keep-list
+    // `flags` is fenced: BOTH consumers below (the keep-list
     // fed to trainingOrder, and the final verdict join) would otherwise
     // re-execute the whole probe + verdict stack — exchange reuse does
     // not survive the differing filters. One row per increment doc,
     // nine scalars; released by the harness broom (keepFilter's
     // materialize-once convention).
-    val flags = increment
+    val flags = Checkpoints.lazyFence(increment
       .select(col("doc_id"),
         greatest(size(TextFns.tokens(col("text"))).cast("long"), lit(0L))
           .as("n_tokens"))
@@ -446,12 +442,7 @@ object Curation {
         (col("n_tokens") >= minTokens).as("quality_ok"),
         coalesce(col("mean_seen"), lit(0.0)).as("mean_seen"))
       .withColumn("keep",
-        !col("is_dup") && col("overlap") <= maxOverlap && col("quality_ok"))
-      // lazy (r21): the final plan's first flags-consumer (the
-      // training-order offset broadcast) materializes the verdict
-      // frame; the keep-list and final join then read blocks — the
-      // dedicated checkpoint job disappears
-      .localCheckpoint(eager = false)
+        !col("is_dup") && col("overlap") <= maxOverlap && col("quality_ok")))
     val order = Sampling.trainingOrder(flags.filter(col("keep")), seed)
     flags.join(order, Seq("doc_id"), "left")
       .select(col("doc_id"), col("is_dup"), col("n_grams"),

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** Benchmark decontamination — the third curation pillar next to dedup
   * ([[TextDedup]]) and quality filtering ([[TextAnalysis.qualityFilter]]):
@@ -38,9 +39,8 @@ object Decontaminate {
     * (there is deliberately no destroy path — live lazy plans may
     * reference it), so repeated builds against UNCHANGED sources must
     * reuse the one filter instead of accumulating a fresh broadcast +
-    * registry entry per call (r15 review). Bounded LRU: evicted
-    * entries only forget the memo (the next build registers a fresh
-    * id); the old entry stays valid for any plan still holding it.
+    * registry entry per call (r15 review). A [[graft.operators.LruMemo]]:
+    * an evicted entry's next build registers a fresh id.
     *
     * A hit is only valid WITHIN the session that registered the probe:
     * the memo value is a name in that session's `FunctionRegistry`,
@@ -55,8 +55,8 @@ object Decontaminate {
     /** Distinguished memo value for a DECLINED build — "this source is
       * oversized, stay in the join regime". Memoized like a name so
       * repeated calls against the unchanged source skip the
-      * limit/count probe (and its checkpoint) instead of re-running
-      * them every call (r17 ADVICE: the old `""` convention never
+      * size probe (and its fence) instead of re-running them every
+      * call (r17 ADVICE: the old `""` convention never
       * memo-hit, so every oversized call paid a fresh probe job and
       * pinned a fresh checkpoint). The NUL bytes keep it outside any
       * registrable function name; callers compare against it and take
@@ -64,10 +64,8 @@ object Decontaminate {
       */
     val Negative = "\u0000negative-verdict\u0000"
 
-    private val cache = new java.util.LinkedHashMap[Any, String](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, String]): Boolean = size > 8
-    }
+    private val cache = new graft.operators.LruMemo[Any, String]
+
     def getOrBuild(spark: org.apache.spark.sql.SparkSession, key: Any)(
         build: => String): String = {
       val fullKey = (System.identityHashCode(spark.sessionState),
@@ -75,18 +73,9 @@ object Decontaminate {
       // a Negative verdict is session-scoped data, not a registry
       // name — valid on its own; real names re-validate against the
       // live registry (a cloned/reset registry rebuilds)
-      val hit = cache.synchronized(Option(cache.get(fullKey))).filter { n =>
-        n == Negative ||
-          spark.sessionState.functionRegistry.functionExists(
-            org.apache.spark.sql.catalyst.FunctionIdentifier(n))
-      }
-      hit match {
-        case Some(name) => name
-        case None =>
-          val name = build // outside the lock: the build runs a job
-          cache.synchronized(cache.put(fullKey, name))
-          name
-      }
+      cache.getOrBuild(fullKey, n => n == Negative ||
+        spark.sessionState.functionRegistry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(n)))(build)
     }
   }
 
@@ -172,7 +161,7 @@ object Decontaminate {
     * fingerprint, bound) like every serve-many artifact — the filter
     * builds once and every corpus/increment probed against the same
     * unchanged eval set reuses it, including the oversized VERDICT
-    * itself (no repeated limit/count probes — the r17 LM lesson).
+    * itself (no repeated size probes — the r17 LM lesson).
     */
   private[llm] def buildGramSetProbe(
       evalDocs: DataFrame,
@@ -185,19 +174,15 @@ object Decontaminate {
     ProbeMemo.getOrBuild(spark, ("gramset",
         grams.queryExecution.analyzed.canonicalized,
         Similarity.sourceVersion(grams), maxRows)) {
-      val ck = grams.localCheckpoint()
-      val bounded =
-        ck.limit(maxRows + 1).count() <= maxRows.toLong
-      val verdict =
-        if (!bounded) ProbeMemo.Negative
-        else {
-          val rows = ck.collect()
-          graft.functions.LongCountMap.registerProbe(spark,
-            spark.sparkContext.broadcast(graft.functions.LongCountMap.build(
-              rows.iterator.map(_.getLong(0) -> 1L), rows.length)))
+      Checkpoints.scoped { s =>
+        Checkpoints.probe(s.lazyFence(grams), maxRows) match {
+          case None => ProbeMemo.Negative
+          case Some(rows) =>
+            graft.functions.LongCountMap.registerProbe(spark,
+              spark.sparkContext.broadcast(graft.functions.LongCountMap.build(
+                rows.iterator.map(_.getLong(0) -> 1L), rows.length)))
         }
-      graft.operators.Checkpoints.release(ck)
-      verdict
+      }
     }
   }
 
@@ -449,10 +434,10 @@ object Decontaminate {
     * twice; here the distinct gram frame feeds the broadcast eval
     * join and the Bloom bit test in the SAME aggregation, so the
     * corpus pays its gram front end exactly once. The returned frame
-    * is `localCheckpoint`ed (it is doc-count-sized — one row per doc,
-    * five scalars) because a calibration consumer always reads it at
-    * least twice (per-doc assertions + the corpus-wide FP count);
-    * release with [[graft.operators.Checkpoints.release]].
+    * is a lazy fence (it is doc-count-sized — one row per doc, five
+    * scalars) because a calibration consumer always reads it at least
+    * twice (per-doc assertions + the corpus-wide FP count); release
+    * with [[graft.operators.Checkpoints.release]].
     */
   def bloomCalibrationAudit(
       docs: DataFrame,
@@ -513,9 +498,7 @@ object Decontaminate {
               .as("overlap"),
             coalesce(col("bloom_hit"), lit(0L)).as("bloom_hit"))
       }
-    // lazy (r21): the caller's first action materializes the audit
-    // frame; downstream multi-consumers then read blocks
-    audited.localCheckpoint(eager = false)
+    Checkpoints.lazyFence(audited)
   }
 
   /** Surgical decontamination — strip the leaked SPANS, keep the

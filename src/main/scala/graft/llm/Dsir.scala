@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** DSIR-style importance-weighted data selection (Data Selection via
   * Importance Resampling, Xie et al. 2023 — hashed n-gram importance
@@ -62,22 +63,20 @@ object Dsir {
       .select(col("b"),
         coalesce(col("t_cnt"), lit(0L)).as("t_cnt"), col("r_cnt"))
 
-    val scored = rTokens
+    // lazy fence (r22, guide §2.4): BOTH consumers — the quantile
+    // threshold's histogram agg and the final keep projection — would
+    // otherwise re-execute the whole token-bucket scoring pass
+    // (tokenize raw ×2 per execution: the rTokens explode AND the
+    // rCounts side of `ratios`). One narrow row per scored doc pins;
+    // released by the harness broom between queries.
+    val scored = Checkpoints.lazyFence(rTokens
       .join(broadcast(ratios), Seq("b")) // bounded by `buckets`
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_toks"),
         sum(col("t_cnt")).as("st"), sum(col("r_cnt")).as("sr"))
       .select(col("doc_id"), col("n_toks"),
         round((col("st") + col("n_toks")).cast("double") /
-          (col("sr") + col("n_toks")).cast("double"), 9).as("score"))
-      // lazy fence (r22, guide §2.4): BOTH consumers — the quantile
-      // threshold's histogram agg and the final keep projection — would
-      // otherwise re-execute the whole token-bucket scoring pass
-      // (tokenize raw ×2 per execution: the rTokens explode AND the
-      // rCounts side of `ratios`). One narrow row per scored doc pins;
-      // the threshold's hist agg materializes it, the final read hits
-      // blocks. Released by the harness broom between queries.
-      .localCheckpoint(eager = false)
+          (col("sr") + col("n_toks")).cast("double"), 9).as("score")))
 
     // exact quantile threshold over the (rounded) score distribution —
     // histogram interpolation, never a buffered group

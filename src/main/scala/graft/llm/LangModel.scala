@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** Bigram language-model quality scoring — the "perplexity filter" of
   * CCNet-style curation (Wenzek et al. 2020, "CCNet: Extracting High
@@ -158,35 +159,33 @@ object LangModel {
       else Decontaminate.ProbeMemo.getOrBuild(spark, ("lmcountmap",
           modelFrame.queryExecution.analyzed.canonicalized,
           Similarity.sourceVersion(modelFrame), broadcastModelMaxRows)) {
-        val ck = modelFrame.localCheckpoint()
-        val bounded = ck.limit(broadcastModelMaxRows + 1).count() <=
-          broadcastModelMaxRows.toLong
-        if (!bounded) {
-          // the OVERSIZED verdict memoizes (r17 ADVICE: the old ""
-          // sentinel never memo-hit, so every call on an unchanged
-          // oversized reference re-ran this limit/count probe and
-          // pinned one more checkpoint) — THIS call hands its
-          // already-materialized checkpoint to the join regime below;
-          // later calls memo-hit the verdict and go straight there,
-          // paying exactly one checkpoint per call like any other
-          // forced-distributed run (released by the harness broom)
-          spilled = Some(ck)
-          Decontaminate.ProbeMemo.Negative
-        } else {
-          val rows = ck.collect()
-          graft.operators.Checkpoints.release(ck)
-          val vocabN = rows.count(_.getInt(0) == 0)
-          require(vocabN > 0,
-            "rareTransitionScore: reference corpus has an empty " +
-              "vocabulary (no tokens) — the rarity gate would pass " +
-              "every document")
-          val pairs = rows.iterator.map { r =>
-            val k = r.getLong(1)
-            (if (r.getInt(0) == 0) k else k | (1L << 62)) -> r.getLong(2)
-          } ++ Iterator(VocabKey -> vocabN.toLong)
-          graft.functions.LongCountMap.registerProbe(spark,
-            spark.sparkContext.broadcast(
-              graft.functions.LongCountMap.build(pairs, rows.length + 1)))
+        val ck = Checkpoints.lazyFence(modelFrame)
+        Checkpoints.probe(ck, broadcastModelMaxRows) match {
+          case None =>
+            // the OVERSIZED verdict memoizes (r17 ADVICE: the old ""
+            // sentinel never memo-hit, so every call on an unchanged
+            // oversized reference re-ran this size probe and pinned one
+            // more fence) — THIS call hands its already-materialized
+            // fence to the join regime below; later calls memo-hit the
+            // verdict and go straight there, paying exactly one fence per
+            // call like any other forced-distributed run (released by the
+            // harness broom)
+            spilled = Some(ck)
+            Decontaminate.ProbeMemo.Negative
+          case Some(rows) =>
+            Checkpoints.release(ck)
+            val vocabN = rows.count(_.getInt(0) == 0)
+            require(vocabN > 0,
+              "rareTransitionScore: reference corpus has an empty " +
+                "vocabulary (no tokens) — the rarity gate would pass " +
+                "every document")
+            val pairs = rows.iterator.map { r =>
+              val k = r.getLong(1)
+              (if (r.getInt(0) == 0) k else k | (1L << 62)) -> r.getLong(2)
+            } ++ Iterator(VocabKey -> vocabN.toLong)
+            graft.functions.LongCountMap.registerProbe(spark,
+              spark.sparkContext.broadcast(
+                graft.functions.LongCountMap.build(pairs, rows.length + 1)))
         }
       }
     val probeName: String =
@@ -203,7 +202,7 @@ object LangModel {
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_bigrams"), sum(col("__r")).as("n_rare"))
       } else {
-        val model = spilled.getOrElse(modelFrame.localCheckpoint())
+        val model = spilled.getOrElse(Checkpoints.fence(modelFrame))
         val trainUni = model.filter(col("t") === 0)
           .select(col("k").as("uh"), col("c").as("c_a"))
         val trainBg = model.filter(col("t") === 1)

@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** Similarity search over `embeddings(vec_id, embedding ARRAY<FLOAT>,
   * label)`. Cosine arithmetic is built from array higher-order
@@ -241,46 +242,43 @@ object Similarity {
     require(k >= 1 && k <= nCandidates, "need 1 <= k <= nCandidates")
     require(lambda > 0.0 && lambda <= 1.0, "lambda must be in (0, 1]")
     import org.apache.spark.sql.expressions.Window
-    val cands = bruteForceTopK(emb, nQueries, nCandidates)
-      .select(col("query_id"), col("vec_id"), col("sim").as("qsim"))
-      .join(emb.select(col("vec_id"), col("embedding").as("cv")),
-        Seq("vec_id"))
-      .withColumn("cn", l2norm(col("cv")))
-      // pool-sized; read by every greedy step. Lazy (r21): the first
-      // step's eager checkpoint job materializes it — one fewer job
-      .localCheckpoint(eager = false)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("mmr").desc, col("vec_id"))
-    var selected = cands.withColumn("mmr", col("qsim"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("query_id"), lit(1L).as("rnk"), col("vec_id"),
-        col("qsim"), col("mmr"))
-      // lazy: step 2's eager checkpoint (or the caller's action when
-      // k == 1) materializes it before any release touches it
-      .localCheckpoint(eager = false)
-    for (t <- 2 to k) {
-      val selIds = selected.select(col("query_id"), col("vec_id"))
-      // selected vectors read back from the pool — selections ARE
-      // pool rows, so no vector columns ride the selection frame
-      val selVecs = cands.join(selIds, Seq("query_id", "vec_id"))
-        .select(col("query_id"), col("cv").as("sv"), col("cn").as("sn"))
-      val prev = selected
-      val next = cands
-        .join(selIds, Seq("query_id", "vec_id"), "left_anti")
-        .join(selVecs, Seq("query_id"))
-        .withColumn("__ps", dot(col("cv"), col("sv")) /
-          (col("cn") * col("sn")))
-        .groupBy(col("query_id"), col("vec_id"), col("qsim"))
-        .agg(max(col("__ps")).as("__pen"))
-        .withColumn("mmr",
-          lit(lambda) * col("qsim") - lit(1.0 - lambda) * col("__pen"))
+    Checkpoints.scoped { s =>
+      // pool-sized; read by every greedy step
+      val cands = s.lazyFence(bruteForceTopK(emb, nQueries, nCandidates)
+        .select(col("query_id"), col("vec_id"), col("sim").as("qsim"))
+        .join(emb.select(col("vec_id"), col("embedding").as("cv")),
+          Seq("vec_id"))
+        .withColumn("cn", l2norm(col("cv"))))
+      val w = Window.partitionBy(col("query_id"))
+        .orderBy(col("mmr").desc, col("vec_id"))
+      var selected = s.lazyFence(cands.withColumn("mmr", col("qsim"))
         .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("query_id"), lit(t.toLong).as("rnk"), col("vec_id"),
-          col("qsim"), col("mmr"))
-      selected = prev.unionByName(next).localCheckpoint()
-      graft.operators.Checkpoints.release(prev)
+        .select(col("query_id"), lit(1L).as("rnk"), col("vec_id"),
+          col("qsim"), col("mmr")))
+      for (t <- 2 to k) {
+        selected = s.advance(selected) { prev =>
+          val selIds = prev.select(col("query_id"), col("vec_id"))
+          // selected vectors read back from the pool — selections ARE
+          // pool rows, so no vector columns ride the selection frame
+          val selVecs = cands.join(selIds, Seq("query_id", "vec_id"))
+            .select(col("query_id"), col("cv").as("sv"), col("cn").as("sn"))
+          val next = cands
+            .join(selIds, Seq("query_id", "vec_id"), "left_anti")
+            .join(selVecs, Seq("query_id"))
+            .withColumn("__ps", dot(col("cv"), col("sv")) /
+              (col("cn") * col("sn")))
+            .groupBy(col("query_id"), col("vec_id"), col("qsim"))
+            .agg(max(col("__ps")).as("__pen"))
+            .withColumn("mmr",
+              lit(lambda) * col("qsim") - lit(1.0 - lambda) * col("__pen"))
+            .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+            .select(col("query_id"), lit(t.toLong).as("rnk"), col("vec_id"),
+              col("qsim"), col("mmr"))
+          s.fence(prev.unionByName(next))
+        }
+      }
+      selected
     }
-    selected
   }
 
   /** Hard-negative mining for contrastive training (the DPR /
@@ -396,7 +394,7 @@ object Similarity {
     * center riding as a dims-sized plan literal (64 doubles — the
     * 12 KB regime, nothing like the MB plan-literal trap the probe
     * handles exist for). Running-min state is ONE double per row,
-    * localCheckpointed per step and released, so lineage stays flat;
+    * fenced per step and released, so lineage stays flat;
     * the k one-row collects ARE the selections — bounded by
     * construction. Cross-engine parity: the distance kernel
     * ([[graft.functions.FloatVecDist2]]) is a fixed-order IEEE fold
@@ -416,39 +414,27 @@ object Similarity {
     require(seed.nonEmpty, "no non-null embeddings to select from")
     val picks = scala.collection.mutable.ArrayBuffer(
       (1L, seed(0).getLong(0), 0.0))
-    // LAZY per-step checkpoints (r21): each step's TakeOrdered(1)
-    // selection job computes every partition of the current state, so
-    // it doubles as the materialization job — the old eager form paid
-    // a dedicated checkpoint job per step (k-1 extra driver round
-    // trips). The previous step's blocks are released only AFTER the
-    // selection has materialized the new state (a lazy checkpoint
-    // cannot recompute once its parent's blocks are dropped).
-    var state = pool
-      .filter(col("vec_id") =!= seed(0).getLong(0))
-      .withColumn("md", dist2(col("embedding"), typedLit(centerOf(seed(0)))))
-      .localCheckpoint(eager = false)
-    var pendingRelease: Option[DataFrame] = None
-    for (t <- 2 to k) {
-      val top = state.orderBy(col("md").desc, col("vec_id")).limit(1)
-        .collect() // materializes `state` in full
-      pendingRelease.foreach(graft.operators.Checkpoints.release)
-      pendingRelease = None
-      if (top.nonEmpty) {
-        picks += ((t.toLong, top(0).getLong(0),
-          top(0).getAs[Double]("md")))
-        val prev = state
-        state = state
-          .filter(col("vec_id") =!= top(0).getLong(0))
-          .withColumn("md", least(col("md"),
-            dist2(col("embedding"), typedLit(centerOf(top(0))))))
-          .localCheckpoint(eager = false)
-        pendingRelease = Some(prev)
+    // LAZY per-step fences (r21): each step's TakeOrdered(1) selection
+    // job computes every partition of the current state, so it doubles
+    // as the materialization job. The scope holds each superseded state
+    // until its successor has materialized.
+    Checkpoints.scoped { s =>
+      var state = s.lazyFence(pool
+        .filter(col("vec_id") =!= seed(0).getLong(0))
+        .withColumn("md", dist2(col("embedding"), typedLit(centerOf(seed(0))))))
+      for (t <- 2 to k) {
+        val top = state.orderBy(col("md").desc, col("vec_id")).limit(1)
+          .collect()
+        if (top.nonEmpty) {
+          picks += ((t.toLong, top(0).getLong(0),
+            top(0).getAs[Double]("md")))
+          state = s.advance(state)(prev => s.lazyFence(prev
+            .filter(col("vec_id") =!= top(0).getLong(0))
+            .withColumn("md", least(col("md"),
+              dist2(col("embedding"), typedLit(centerOf(top(0))))))))
+        }
       }
     }
-    // the final state may be unmaterialized — its parent must survive
-    // until both are dropped together
-    graft.operators.Checkpoints.release(state)
-    pendingRelease.foreach(graft.operators.Checkpoints.release)
     import spark.implicits._
     picks.toSeq.toDF("rnk", "vec_id", "dist2")
   }
@@ -869,18 +855,13 @@ object Similarity {
     * only the first pays the (tiny, one-row-per-cell) collect job,
     * while an index overwritten in place changes the mtime component
     * and re-collects (r12 — closes the stale-read trade-off the first
-    * cut documented). Bounded LRU — centroid tables are report-sized
-    * by construction, and 8 live indexes per driver is generous.
+    * cut documented). A [[graft.operators.LruMemo]] — centroid tables
+    * are report-sized by construction, and 8 live indexes per driver
+    * is generous.
     */
-  private val centCollectCache =
-    new java.util.LinkedHashMap[
-        (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-        Array[org.apache.spark.sql.Row]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[
-            (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-            Array[org.apache.spark.sql.Row]]): Boolean = size > 8
-    }
+  private val centCollectCache = new graft.operators.LruMemo[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
+    Array[org.apache.spark.sql.Row]]
 
   /** Fingerprint of the file-backed leaves of `plan` (0 for purely
     * local/in-memory plans): folded into the memo key so an index
@@ -935,18 +916,10 @@ object Similarity {
     * overwritten in place changes the fingerprint and re-collects;
     * purely local plans carry their data inside the canonical form).
     */
-  private def memoCollect(plan: DataFrame): Array[org.apache.spark.sql.Row] = {
-    val key = (plan.queryExecution.analyzed.canonicalized, sourceVersion(plan))
-    centCollectCache.synchronized {
-      Option(centCollectCache.get(key))
-    } match {
-      case Some(rows) => rows
-      case None =>
-        val rows = plan.collect() // outside the lock: collect runs a job
-        centCollectCache.synchronized { centCollectCache.put(key, rows) }
-        rows
-    }
-  }
+  private def memoCollect(plan: DataFrame): Array[org.apache.spark.sql.Row] =
+    centCollectCache.getOrBuild(
+      (plan.queryExecution.analyzed.canonicalized, sourceVersion(plan)))(
+      plan.collect())
 
   /** Collected centroid rows `(ccell, cv)` as ONE literal
     * `array<struct<ccell, cv>>` column, sorted by cell id — the same
@@ -1278,17 +1251,16 @@ object Similarity {
       .agg(transform(
         array_sort(collect_list(struct(col("pos"), col("cv")))),
         s => s.getField("cv")).as("__centroid"))
-    val scored = e.join(broadcast(cent), Seq(groupCol))
+    // fence (r22, guide §2.4): the quantile threshold's histogram agg
+    // and the final outlier projection both consume the cosine pass —
+    // without the fence each re-runs the centroid build + broadcast
+    // join + per-row interpreted dot folds. One narrow row per vector
+    // pins; released by the harness broom.
+    val scored = Checkpoints.lazyFence(e.join(broadcast(cent), Seq(groupCol))
       .select(col("vec_id"), col(groupCol),
         round(dotD(col("embedding"), col("__centroid")) /
           (l2norm(col("embedding")) * sqrt(dotD(col("__centroid"),
-            col("__centroid")))), 9).as("sim"))
-      // lazy fence (r22, guide §2.4): the quantile threshold's
-      // histogram agg and the final outlier projection both consume
-      // the cosine pass — without the fence each re-runs the centroid
-      // build + broadcast join + per-row interpreted dot folds. One
-      // narrow row per vector pins; released by the harness broom.
-      .localCheckpoint(eager = false)
+            col("__centroid")))), 9).as("sim")))
     // route the percentile form by probing the SCAN, not the scored
     // subplan — |scored| == |e| (the centroid join is inner on a
     // complete key set), so the cosine pipeline never re-executes

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** Text-analysis operators over `documents(doc_id, text, lang, source,
   * n_chars)`: corpus statistics, per-document quality scoring, token
@@ -350,11 +351,10 @@ object TextAnalysis {
     // scan+explode+tokenize pipeline runs a single time (the
     // minhashIndex convention); it is doc-vocabulary-sized, far
     // smaller than the raw token stream
-    val tc = TextDedup.spread(docs, "doc_id")
+    val tc = Checkpoints.lazyFence(TextDedup.spread(docs, "doc_id")
       .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("tok"))
       .groupBy(col("doc_id"), col("tok"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("c")))
     val nDocs = docs.agg(count(lit(1)).cast("double").as("__n_docs"))
     val stop = tc
       .groupBy(col("tok"))
@@ -393,10 +393,9 @@ object TextAnalysis {
     // the tokenize+md5+window gram pipeline runs a single time; the
     // groupBy rides the gram window's doc_id partitioning (no extra
     // exchange before the checkpoint)
-    val bgc = TextDedup.gramHashes(docs, 2)
+    val bgc = Checkpoints.lazyFence(TextDedup.gramHashes(docs, 2)
       .groupBy(col("doc_id"), col("gh"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("c")))
     val counts = bgc.groupBy(col("gh")).agg(sum(col("c")).as("corpus_c"))
     bgc.join(counts, "gh")
       .groupBy(col("doc_id"))
@@ -416,11 +415,10 @@ object TextAnalysis {
     * window over the doc's distinct terms only.
     */
   def tfidfTopTerms(docs: DataFrame, k: Int = 5): DataFrame = {
-    val tf = TextDedup.spread(docs, "doc_id")
+    val tf = Checkpoints.lazyFence(TextDedup.spread(docs, "doc_id")
       .select(col("doc_id"), explode(TextFns.tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("doc_id"))
@@ -473,7 +471,7 @@ object TextAnalysis {
   def familiarityBucketsApprox(
       docs: DataFrame, n: Int = 3, accuracy: Int = 10000): DataFrame = {
     require(n >= 2, "need at least two buckets")
-    val scores = familiarityScores(docs).localCheckpoint(eager = false)
+    val scores = Checkpoints.lazyFence(familiarityScores(docs))
     val probs = (1 until n).map(_.toDouble / n).toArray
     val cuts = scores.agg(
       percentile_approx(col("familiarity"), typedlit(probs), lit(accuracy))
@@ -533,18 +531,16 @@ object TextAnalysis {
     require(terms.nonEmpty && terms.forall(_.matches("[a-z0-9_]+")),
       "terms must be simple lowercase tokens (SQL-literal-safe)")
     val ts = terms.sorted
-    val perDoc = docs
+    // lazy fence (r22, guide §2.4): the corpus-stats agg AND the
+    // scoring projection both consume this frame — without the fence
+    // each re-runs the tokenize + per-term filter pass over the
+    // corpus. One narrow row per doc pins; released by the harness
+    // broom between queries.
+    val perDoc = Checkpoints.lazyFence(docs
       .select(col("doc_id"), TextFns.tokens(col("text")).as("w"))
       .withColumn("dl", size(col("w")).cast("long"))
       .select(Seq(col("doc_id"), col("dl")) ++ ts.map(t =>
-        size(filter(col("w"), x => x === t)).cast("double").as(s"tf_$t")): _*)
-      // lazy fence (r22, guide §2.4): the corpus-stats agg AND the
-      // scoring projection both consume this frame — without the fence
-      // each re-runs the tokenize + per-term filter pass over the
-      // corpus. One narrow row per doc pins; the stats agg
-      // materializes it, the scorer reads blocks. Released by the
-      // harness broom between queries.
-      .localCheckpoint(eager = false)
+        size(filter(col("w"), x => x === t)).cast("double").as(s"tf_$t")): _*))
     val statCols = Seq(
       count(lit(1)).as("n_docs"),
       sum(col("dl")).as("sum_dl")) ++ ts.map(t =>
@@ -703,7 +699,7 @@ object TextAnalysis {
     // plan-verified: the unshared form re-ran the corpus tokenize
     // pipeline twice), and the vocab frame feeds four consumers (two
     // count joins, two report-sized string join-backs).
-    val model = docs
+    val model = Checkpoints.lazyFence(docs
       .select(TextFns.tokens(col("text")).as("w"))
       .select(col("w"), transform(col("w"), t => TextFns.hash31(t)).as("hs"))
       .select(explode(concat(
@@ -713,8 +709,7 @@ object TextAnalysis {
           k => struct(lit(1).as("t"), k.as("k"),
             lit(null).cast("string").as("tok"))))).as("x"))
       .groupBy(col("x.t").as("t"), col("x.k").as("k"), col("x.tok").as("tok"))
-      .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = false)
+      .agg(count(lit(1)).as("c")))
     val bgc = model.filter(col("t") === 1)
       .select(col("k").as("bg"), col("c").as("n_ab"))
     // total bigram mass — includes the sub-minCount tail by definition

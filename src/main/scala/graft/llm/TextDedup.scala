@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Checkpoints
 
 /** Deduplication operators over a `documents(doc_id, text, ...)` corpus —
   * the LLM-training-pipeline layer. Four families, each with a distinct
@@ -400,7 +401,7 @@ object TextDedup {
     * new batch then probes it with [[probeMinhashIndex]] instead of
     * re-signaturing 100 TB per increment.
     *
-    * `sets` and the internal signature table are localCheckpointed
+    * `sets` and the internal signature table are lazily fenced
     * (each is read 2–3 times by the self-join/rerank consumers — the
     * in-session analog of the parquet index a production job writes
     * between stages); `buckets` itself is NOT — it re-derives from the
@@ -433,13 +434,9 @@ object TextDedup {
       bands: Int,
       maxBucketWidth: Option[Int],
       checkpointSignatures: Boolean): (DataFrame, DataFrame) = {
-    // LAZY checkpoint (r21): every caller consumes `sets` through
-    // full-partition actions (the signature agg, Jaccard rerank,
-    // posting-frame explode), so the first consumer's job materializes
-    // and truncates it — same exactly-once pipeline guarantee as the
-    // eager form, minus one dedicated materialization job per index
-    // build (the 120-200 ms TextDedup:376 job in every minhash query).
-    val sets = shingleSets(docs, shingleK).localCheckpoint(eager = false)
+    // lazy: every caller reads `sets` in full (the signature agg,
+    // Jaccard rerank, posting-frame explode)
+    val sets = Checkpoints.lazyFence(shingleSets(docs, shingleK))
     (bucketsFromSets(sets, nHashes, bands, maxBucketWidth,
       checkpointSignatures), sets)
   }
@@ -476,10 +473,8 @@ object TextDedup {
         min(TextFns.minhashPerm(0, col("gh"))).as("mh_0"),
         (1 until nHashes).map(s =>
           min(TextFns.minhashPerm(s, col("gh"))).as(s"mh_$s")): _*)
-    // lazy for the same reason: the LSH self-join's first bucket read
-    // materializes it; the second read (and any rerank) hits blocks
-    val mh = if (checkpointSignatures) mh0.localCheckpoint(eager = false)
-      else mh0
+    // both LSH self-join sides (and any rerank) read it
+    val mh = if (checkpointSignatures) Checkpoints.lazyFence(mh0) else mh0
     // one 128-bit bucket key per band: md5 of the band's minhash values
     // in seed order (order-independent aggregate inputs ⇒ deterministic)
     val bandStructs = (0 until bands).map { b =>
@@ -741,23 +736,20 @@ object TextDedup {
     // candidate generation: ONLY cheap conditions in/around the join —
     // the block equi-key, the id order, and the length bound
     // (|len(a)−len(b)| > maxDist already implies dist > maxDist)
-    val cand = keyed.as("a")
+    // optimization fence (the q67 lesson, join edition): without it
+    // PushPredicateThroughJoin folds the dist filter — levenshtein
+    // included — into the join CONDITION, which evaluates on the
+    // interpreted row path (measured 13.4 s at sf0.1 vs 0.9 s for
+    // the same join without it; the identical DP volume costs 0.03 s
+    // in a codegen'd Project). The fence pins the candidate frame
+    // (pair-list-sized, tiny) so the DP runs exactly once per pair;
+    // lazy, because the plan cut alone is the point.
+    val cand = Checkpoints.lazyFence(keyed.as("a")
       .join(keyed.as("b"),
         col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
       .filter(abs(length(col("a.text")) - length(col("b.text"))) <= maxDist)
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-        col("a.text").as("ta"), col("b.text").as("tb"))
-      // optimization fence (the q67 lesson, join edition): without it
-      // PushPredicateThroughJoin folds the dist filter — levenshtein
-      // included — into the join CONDITION, which evaluates on the
-      // interpreted row path (measured 13.4 s at sf0.1 vs 0.9 s for
-      // the same join without it; the identical DP volume costs 0.03 s
-      // in a codegen'd Project). The fence pins the candidate frame
-      // (pair-list-sized, tiny) so the DP runs exactly once per pair.
-      // Lazy (r21): the LogicalRDD fence exists at plan time either
-      // way; the single consumer's job materializes it, saving the
-      // dedicated checkpoint job.
-      .localCheckpoint(eager = false)
+        col("a.text").as("ta"), col("b.text").as("tb")))
     cand
       .select(col("da"), col("db"),
         // thresholded builtin = banded O(len·maxDist) DP, -1 above it
@@ -847,8 +839,7 @@ object TextDedup {
     */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
       maxBucketWidth: Option[Int] = None): DataFrame = {
-    val sig = simhashSignatures(docs) // reused by both join sides
-      .localCheckpoint(eager = false) // lazy: first side's scan materializes
+    val sig = Checkpoints.lazyFence(simhashSignatures(docs)) // both join sides
     val banded = simhashBands(sig)
     val capped =
       maxBucketWidth.fold(banded)(capBucketWidth(banded, Seq("band", "chunk"), _))
@@ -915,11 +906,11 @@ object TextDedup {
     * a plain equi-join edges⋈labels plus a `groupBy(min)`; rounds
     * needed = component DIAMETER, and near-dup components are
     * shallow (dup clusters of one document family), so the fixpoint
-    * lands in a handful of rounds. Each round `localCheckpoint`s to
-    * truncate the growing lineage, and the SUPERSEDED round's pinned
-    * blocks are released as soon as the convergence probe has read
-    * them — without that, an N-round run holds N copies of the label
-    * set in executor memory for the rest of the session. Convergence
+    * lands in a handful of rounds. Each round fences to truncate the
+    * growing lineage, and the SUPERSEDED round is released as soon as
+    * the convergence probe has read it — without that, an N-round run
+    * holds N copies of the label set in executor memory for the rest
+    * of the session. Convergence
     * is detected with a bounded `limit(1)` probe (labels only ever
     * decrease). `maxIter`
     * is the safety rail for adversarially deep chains; hitting it
@@ -959,113 +950,110 @@ object TextDedup {
     lastStarRounds = 0
     val smallMax =
       if (graft.Regimes.forceDistributed) 0 else smallGraphMaxEdges
-    // lazy checkpoint: the fused probe below (or, for non-integral ids
-    // and forced runs, the distributed loop's first round) materializes
-    // the symmetric edge set — no dedicated checkpoint job
-    val edges = pairs.select(col("da").as("a"), col("db").as("b"))
-      .union(pairs.select(col("db").as("a"), col("da").as("b")))
-      .distinct()
-      .localCheckpoint(eager = false)
-    // SMALL-GRAPH REGIME (r12): near-dup graphs are usually tiny next
-    // to their corpus (edges ≈ dup pairs, not docs), and the
-    // distributed loop pays 2–3 scheduler round trips PER ROUND — at
-    // bench scale that is most of the operator's cost (q61: ~12 of 15
-    // jobs are loop floors). ONE fused materialize-and-probe job (r22,
-    // [[graft.operators.Checkpoints.countAndCollect]]): it drains the
-    // symmetric edge set — completing the lazy checkpoint — and ships
-    // the edges back with the counts, so a graph of ≤
-    // `smallGraphMaxEdges` edges of integral ids closes its components
-    // with one driver-side union-find whose representative is the
-    // component MINIMUM — the exact relation the fixpoint computes,
-    // hash-identical, in 1 job instead of 3×diameter. ~1e5 edges ×
-    // 16 B is MBs on the driver; a graph that overflows the probe
-    // takes the distributed loop below, which remains the 100 TB path
-    // (its blocks are already whole from the drain). Pass 0 to force
-    // the distributed loop (the rail/equivalence specs do).
-    val idType = edges.schema("a").dataType
-    val integralIds =
-      idType == org.apache.spark.sql.types.LongType ||
-        idType == org.apache.spark.sql.types.IntegerType
-    val smallEdges: Option[Array[org.apache.spark.sql.Row]] =
-      if (integralIds && smallMax > 0) {
-        val (n, rows) =
-          graft.operators.Checkpoints.countAndCollect(edges, smallMax.toLong)
-        if (n <= smallMax) Some(rows) else None
-      } else None
-    if (smallEdges.isDefined) {
-      val es = smallEdges.get
-      graft.operators.Checkpoints.release(edges)
-      def idAt(r: org.apache.spark.sql.Row, i: Int): Long = r.get(i) match {
-        case l: java.lang.Long    => l
-        case n: java.lang.Integer => n.toLong
+    Checkpoints.scoped { s =>
+      // lazy: the probe below or the distributed loop's first round
+      // reads the symmetric edge set in full
+      val edges = s.lazyFence(
+        pairs.select(col("da").as("a"), col("db").as("b"))
+          .union(pairs.select(col("db").as("a"), col("da").as("b")))
+          .distinct())
+      // SMALL-GRAPH REGIME (r12): near-dup graphs are usually tiny next
+      // to their corpus (edges ≈ dup pairs, not docs), and the
+      // distributed loop pays 2–3 scheduler round trips PER ROUND — at
+      // bench scale that is most of the operator's cost (q61: ~12 of 15
+      // jobs are loop floors). ONE probe job drains the edge set and
+      // ships it back when it fits, so a graph of ≤ `smallGraphMaxEdges`
+      // edges of integral ids closes its components with one
+      // driver-side union-find ([[driverComponents]]) in 1 job instead
+      // of 3×diameter. ~1e5 edges × 16 B is MBs on the driver; a graph
+      // that overflows the probe takes the distributed loop below,
+      // which remains the 100 TB path. Pass 0 to force the distributed
+      // loop (the rail/equivalence specs do).
+      val idType = edges.schema("a").dataType
+      val integralIds =
+        idType == org.apache.spark.sql.types.LongType ||
+          idType == org.apache.spark.sql.types.IntegerType
+      val smallEdges =
+        if (integralIds && smallMax > 0) Checkpoints.probe(edges, smallMax)
+        else None
+      smallEdges match {
+        case Some(es) => driverComponents(pairs.sparkSession, es, idType)
+        case None =>
+          val propBudget = math.min(maxIter, escalateAfter)
+          var labels = s.fence(edges.select(col("a").as("id")).distinct()
+            .withColumn("lbl", col("id")))
+          var iter = 0
+          var converged = false
+          while (!converged && iter < propBudget) {
+            labels = s.advance(labels) { prev =>
+              val next = s.fence(edges.join(prev, col("a") === col("id"))
+                .select(col("b").as("id"), col("lbl"))
+                .union(prev.select(col("id"), col("lbl")))
+                .groupBy(col("id")).agg(min(col("lbl")).as("lbl")))
+              // bounded existence probe: labels decrease monotonically,
+              // so one surviving strict decrease means another round
+              converged = next.as("n")
+                .join(prev.as("o"), col("n.id") === col("o.id"))
+                .filter(col("n.lbl") < col("o.lbl"))
+                .limit(1).count() == 0
+              next
+            }
+            iter += 1
+          }
+          if (converged)
+            labels.select(col("id").as("doc_id"), col("lbl").as("component"))
+          else if (maxIter > propBudget) {
+            // deep graph: diameter exceeds the propagation budget —
+            // spend the remaining rounds on the star alternation (same
+            // output, O(log n))
+            s.release(labels)
+            starComponents(edges, maxIter - propBudget)
+          } else
+            throw new IllegalStateException(
+              s"duplicateComponents did not converge in $maxIter rounds — " +
+                "component diameter exceeds maxIter; raise it for this graph")
       }
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while ({ val p = parent.getOrDefault(r, r); p != r }) r = parent.get(r)
-        var c = x // path compression
-        while (c != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
-        r
+    }
+  }
+
+  /** The small-graph regime of [[duplicateComponents]]: union-find over
+    * the collected symmetric edges with min-root representatives — the
+    * root IS the component minimum, so the relation is the one the
+    * distributed fixpoint computes, hash-identical.
+    */
+  private def driverComponents(
+      spark: org.apache.spark.sql.SparkSession,
+      es: Array[org.apache.spark.sql.Row],
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    def idAt(r: org.apache.spark.sql.Row, i: Int): Long = r.get(i) match {
+      case l: java.lang.Long    => l
+      case n: java.lang.Integer => n.toLong
+    }
+    val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while ({ val p = parent.getOrDefault(r, r); p != r }) r = parent.get(r)
+      var c = x // path compression
+      while (c != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
+      r
+    }
+    es.foreach { row =>
+      val ra = find(idAt(row, 0)); val rb = find(idAt(row, 1))
+      if (ra != rb) { // smaller root absorbs: root IS the component min
+        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
       }
-      es.foreach { row =>
-        val ra = find(idAt(row, 0)); val rb = find(idAt(row, 1))
-        if (ra != rb) { // smaller root absorbs: root IS the component min
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val members = new java.util.TreeSet[java.lang.Long]()
-      es.foreach { r => members.add(idAt(r, 0)); members.add(idAt(r, 1)) }
-      def asId(v: Long): Any =
-        if (idType == org.apache.spark.sql.types.IntegerType) v.toInt else v
-      val outRows = new java.util.ArrayList[org.apache.spark.sql.Row](members.size())
-      members.forEach(id =>
-        outRows.add(org.apache.spark.sql.Row(asId(id), asId(find(id)))))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", idType, nullable = false),
-        org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
-      return pairs.sparkSession.createDataFrame(outRows, schema)
     }
-    val propBudget = math.min(maxIter, escalateAfter)
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint()
-    var iter = 0
-    var converged = false
-    while (!converged && iter < propBudget) {
-      val next = edges.join(labels, col("a") === col("id"))
-        .select(col("b").as("id"), col("lbl"))
-        .union(labels.select(col("id"), col("lbl")))
-        .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-        .localCheckpoint()
-      // bounded existence probe: labels decrease monotonically, so one
-      // surviving strict decrease means another round is needed
-      converged = next.as("n")
-        .join(labels.as("o"), col("n.id") === col("o.id"))
-        .filter(col("n.lbl") < col("o.lbl"))
-        .limit(1).count() == 0
-      graft.operators.Checkpoints.release(labels) // probe done — old round's blocks free
-      labels = next
-      iter += 1
-    }
-    if (converged) {
-      // edges fed every round but the RETURNED plan reads only the final
-      // labels checkpoint — release the edge blocks too
-      graft.operators.Checkpoints.release(edges)
-      labels.select(col("id").as("doc_id"), col("lbl").as("component"))
-    } else if (maxIter > propBudget) {
-      // deep graph: diameter exceeds the propagation budget — spend the
-      // remaining rounds on the star alternation (same output, O(log n))
-      graft.operators.Checkpoints.release(labels)
-      val out = starComponents(edges, maxIter - propBudget)
-      graft.operators.Checkpoints.release(edges)
-      out
-    } else {
-      graft.operators.Checkpoints.release(labels)
-      graft.operators.Checkpoints.release(edges)
-      throw new IllegalStateException(
-        s"duplicateComponents did not converge in $maxIter rounds — " +
-          "component diameter exceeds maxIter; raise it for this graph")
-    }
+    val members = new java.util.TreeSet[java.lang.Long]()
+    es.foreach { r => members.add(idAt(r, 0)); members.add(idAt(r, 1)) }
+    def asId(v: Long): Any =
+      if (idType == org.apache.spark.sql.types.IntegerType) v.toInt else v
+    val outRows = new java.util.ArrayList[org.apache.spark.sql.Row](members.size())
+    members.forEach(id =>
+      outRows.add(org.apache.spark.sql.Row(asId(id), asId(find(id)))))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id", idType, nullable = false),
+      org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
+    spark.createDataFrame(outRows, schema)
   }
 
   /** Default small-graph probe bound for [[duplicateComponents]]
@@ -1103,8 +1091,8 @@ object TextDedup {
     *
     * Each step is an equi-keyed groupBy + join on node id (no
     * all-pairs, no driver-side graph), the edge set only shrinks or
-    * flattens, and rounds localCheckpoint with superseded-block
-    * release exactly like the propagation loop. Input `edges(a, b)`
+    * flattens, and rounds fence and release the superseded round
+    * exactly like the propagation loop. Input `edges(a, b)`
     * must be the symmetric closure already deduplicated (what
     * [[duplicateComponents]] builds); `pairs(da, db)` callers should
     * go through [[duplicateComponents]].
@@ -1133,44 +1121,46 @@ object TextDedup {
         .union(mins.select(col("u").as("a"), col("m").as("b")))
         .distinct()
     }
-    // canonical undirected form (a > b) so set-equality probes compare
-    // like with like; edges0 is symmetric, keep one direction
-    var cur = edges0.filter(col("a") > col("b")).distinct().localCheckpoint()
-    var curCnt = cur.count()
-    var iter = 0
-    var converged = false
-    while (!converged) {
-      if (iter >= maxIter)
-        throw new IllegalStateException(
-          s"starComponents did not converge in $maxIter rounds — " +
-            "raise maxIter for this graph")
-      // checkpoint BETWEEN the two star steps (r12, found on a 550k-
-      // edge planted graph): smallStar consumes its input through two
-      // union legs plus the min agg, so an unmaterialized largeStar
-      // pipeline re-executes several times per round — the barrier
-      // makes each round cost one pass of each step (54 s → 11 s on
-      // the 550k-edge planted graph)
-      val ls = largeStar(cur).localCheckpoint()
-      val next = smallStar(ls).localCheckpoint()
-      graft.operators.Checkpoints.release(ls)
-      // both sides are canonical DISTINCT sets, so equal counts plus
-      // one empty difference imply equality — the count is free off
-      // the fresh checkpoint and skips the except-join entirely in the
-      // still-shrinking rounds
-      val nextCnt = next.count()
-      converged = nextCnt == curCnt &&
-        next.exceptAll(cur).limit(1).count() == 0
-      graft.operators.Checkpoints.release(cur)
-      cur = next
-      curCnt = nextCnt
-      iter += 1
+    Checkpoints.scoped { s =>
+      // canonical undirected form (a > b) so set-equality probes
+      // compare like with like; edges0 is symmetric, keep one direction
+      var cur = s.fence(edges0.filter(col("a") > col("b")).distinct())
+      var curCnt = cur.count()
+      var iter = 0
+      var converged = false
+      while (!converged) {
+        if (iter >= maxIter)
+          throw new IllegalStateException(
+            s"starComponents did not converge in $maxIter rounds — " +
+              "raise maxIter for this graph")
+        cur = s.advance(cur) { prev =>
+          // fence BETWEEN the two star steps (r12, found on a 550k-
+          // edge planted graph): smallStar consumes its input through
+          // two union legs plus the min agg, so an unmaterialized
+          // largeStar pipeline re-executes several times per round —
+          // the barrier makes each round cost one pass of each step
+          // (54 s → 11 s on the 550k-edge planted graph)
+          val ls = s.fence(largeStar(prev))
+          val next = s.advance(ls)(l => s.fence(smallStar(l)))
+          // both sides are canonical DISTINCT sets, so equal counts
+          // plus one empty difference imply equality — the count is
+          // free off the fresh fence and skips the except-join entirely
+          // in the still-shrinking rounds
+          val nextCnt = next.count()
+          converged = nextCnt == curCnt &&
+            next.exceptAll(prev).limit(1).count() == 0
+          curCnt = nextCnt
+          next
+        }
+        iter += 1
+      }
+      lastStarRounds = iter
+      // star forest: every edge is (member, component-min); the mins
+      // label themselves
+      cur.select(col("a").as("doc_id"), col("b").as("component"))
+        .union(cur.select(col("b"), col("b")).distinct())
+        .distinct()
     }
-    lastStarRounds = iter
-    // star forest: every edge is (member, component-min); the mins
-    // label themselves
-    cur.select(col("a").as("doc_id"), col("b").as("component"))
-      .union(cur.select(col("b"), col("b")).distinct())
-      .distinct()
   }
 
   /** Canonical-document election per duplicate cluster — the emission
@@ -1252,78 +1242,62 @@ object TextDedup {
     require(iters >= 1 && iters <= 16, "iters must be in [1, 16]")
     require(dampNum > 0 && dampDen > dampNum, "damping must be in (0, 1)")
     // ONE execution of the (expensive — LSH candidate join + rerank)
-    // pairs lineage: pairs checkpoints FIRST, then symmetrization,
-    // degrees, the degree-annotated edges, and the node set all derive
-    // from checkpoints — never from the pairs plan again. (r18, the
-    // r17 #4 attribution: the old form checkpointed only the SYMMETRIC
-    // set, whose union's two branches each executed the full LSH
-    // lineage — measured 2.4 s of the 3.3 s sf1 total for a 2.5k-edge
-    // graph; re-running the lineage twice was the whole "drift".)
-    val p0 = pairs.select(col("da"), col("db")).localCheckpoint(eager = false)
-
-    // bounded regime: run the k rounds as driver Long loops — same
-    // order-free integer arithmetic, zero iteration jobs (see scaladoc).
-    // ONE fused materialize-and-probe job (r22, countAndCollect; the
-    // r21 form ran a count job and then a collect job): the drain
-    // completes the checkpoint either way, and an oversized graph
-    // ships back only per-partition prefixes, never the full pair
-    // list — the distributed loop then reads whole blocks.
-    if (!graft.Regimes.forceDistributed) {
-      val (n, probe) =
-        graft.operators.Checkpoints.countAndCollect(p0, MaxDriverEdges.toLong)
-      if (n <= MaxDriverEdges) {
-        graft.operators.Checkpoints.release(p0)
-        return driverCentrality(pairs.sparkSession, probe, iters, initMass,
-          dampNum, dampDen)
+    // pairs lineage: pairs fences FIRST, then symmetrization, degrees,
+    // the degree-annotated edges, and the node set all derive from
+    // fences — never from the pairs plan again. (r18, the r17 #4
+    // attribution: the old form fenced only the SYMMETRIC set, whose
+    // union's two branches each executed the full LSH lineage —
+    // measured 2.4 s of the 3.3 s sf1 total for a 2.5k-edge graph;
+    // re-running the lineage twice was the whole "drift".)
+    Checkpoints.scoped { s =>
+      val p0 = s.lazyFence(pairs.select(col("da"), col("db")))
+      // bounded regime: run the k rounds as driver Long loops — same
+      // order-free integer arithmetic, zero iteration jobs (see
+      // scaladoc). The probe job completes the fence either way, so the
+      // distributed loop reads whole blocks.
+      val small =
+        if (graft.Regimes.forceDistributed) None
+        else Checkpoints.probe(p0, MaxDriverEdges.toLong)
+      small match {
+        case Some(rows) =>
+          driverCentrality(pairs.sparkSession, rows, iters, initMass,
+            dampNum, dampDen)
+        case None =>
+          val sym = s.advance(p0)(p => s.fence(
+            p.select(col("da").as("a"), col("db").as("b"))
+              .union(p.select(col("db").as("a"), col("da").as("b")))
+              .distinct()))
+          val edges = s.advance(sym)(e => s.fence(
+            e.join(e.groupBy(col("a")).agg(count(lit(1)).as("deg")), Seq("a"))))
+          val deg = edges.select(col("a").as("id"), col("deg")).distinct()
+          // overflow rail: per-node mass is bounded by the CONSERVED
+          // total nodes·initMass (truncation only leaks), so the
+          // per-edge multiply stays exact iff nodes·initMass·dampNum <
+          // 2^63. Wrapped longs would silently corrupt on the engine
+          // side while the SQL mirror promotes to wider integers — fail
+          // loudly and tell the caller the fix (smaller initMass scales
+          // every mass linearly).
+          val nNodes = deg.count()
+          require(nNodes <= Long.MaxValue / dampNum / initMass,
+            s"$nNodes nodes at initMass=$initMass would overflow the " +
+              s"per-edge multiply; lower initMass (max nodes at this mass: " +
+              s"${Long.MaxValue / dampNum / initMass})")
+          val base = initMass * (dampDen - dampNum) / dampDen
+          var mass = s.fence(deg.select(col("id"), lit(initMass).as("m")))
+          for (_ <- 0 until iters)
+            mass = s.advance(mass)(m => s.fence(edges
+              .join(m, edges("a") === m("id"))
+              .select(col("b"),
+                expr(s"(m * $dampNum div $dampDen) div deg").as("c"))
+              .groupBy(col("b"))
+              .agg((sum(col("c")) + lit(base)).as("m"))
+              .select(col("b").as("id"), col("m"))))
+          s.fence(mass
+            .join(deg, Seq("id"))
+            .select(col("id").as("doc_id"), col("m").as("mass"),
+              col("deg").as("n_neighbors")))
       }
     }
-
-    val sym = p0.select(col("da").as("a"), col("db").as("b"))
-      .union(p0.select(col("db").as("a"), col("da").as("b")))
-      .distinct()
-      .localCheckpoint()
-    graft.operators.Checkpoints.release(p0)
-    val edges = sym
-      .join(sym.groupBy(col("a")).agg(count(lit(1)).as("deg")), Seq("a"))
-      .localCheckpoint()
-    graft.operators.Checkpoints.release(sym)
-    val deg = edges.select(col("a").as("id"), col("deg")).distinct()
-    // overflow rail: per-node mass is bounded by the CONSERVED total
-    // nodes·initMass (truncation only leaks), so the per-edge multiply
-    // stays exact iff nodes·initMass·dampNum < 2^63. Wrapped longs
-    // would silently corrupt on the engine side while the SQL mirror
-    // promotes to wider integers — fail loudly and tell the caller
-    // the fix (smaller initMass scales every mass linearly).
-    val nNodes = deg.count()
-    require(nNodes <= Long.MaxValue / dampNum / initMass,
-      s"$nNodes nodes at initMass=$initMass would overflow the " +
-        s"per-edge multiply; lower initMass (max nodes at this mass: " +
-        s"${Long.MaxValue / dampNum / initMass})")
-    val base = initMass * (dampDen - dampNum) / dampDen
-    var mass = deg.select(col("id"), lit(initMass).as("m"))
-      .localCheckpoint()
-    var i = 0
-    while (i < iters) {
-      val next = edges
-        .join(mass, edges("a") === mass("id"))
-        .select(col("b"),
-          expr(s"(m * $dampNum div $dampDen) div deg").as("c"))
-        .groupBy(col("b"))
-        .agg((sum(col("c")) + lit(base)).as("m"))
-        .select(col("b").as("id"), col("m"))
-        .localCheckpoint()
-      graft.operators.Checkpoints.release(mass)
-      mass = next
-      i += 1
-    }
-    val out = mass
-      .join(deg, Seq("id"))
-      .select(col("id").as("doc_id"), col("m").as("mass"),
-        col("deg").as("n_neighbors"))
-      .localCheckpoint()
-    graft.operators.Checkpoints.release(mass)
-    graft.operators.Checkpoints.release(edges)
-    out
   }
 
   /** Above this many pair rows the centrality iterations stay in the
@@ -1469,14 +1443,13 @@ object TextDedup {
     // price here (single-family gram consumers are the opposite trade —
     // see gramHashes).
     val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val fp = tokenHashRows(docs)
+    val fp = Checkpoints.lazyFence(tokenHashRows(docs) // both join sides
       .withColumn("gh",
         gramExpr(shingleK, TextFns.shingleCoef, w) * lit(1L << 31) +
           gramExpr(shingleK, TextFns.shingleCoefB, w))
       .filter(col("gh").isNotNull)
       .groupBy(col("doc_id"))
-      .agg(min(col("gh")).as("fp"))
-      .localCheckpoint(eager = false) // reused by both join sides
+      .agg(min(col("gh")).as("fp")))
     fp.as("a")
       .join(fp.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))

@@ -273,29 +273,25 @@ object IntervalJoin {
     // 0.94 → 0.79 s). The histogram is the operator's own
     // value-bounded frame (≤ 2 narrow rows per distinct endpoint —
     // exactly what [[overlapHistogram]] persists as the write-side
-    // layout), so localCheckpoint pins report-scale rows, never the
+    // layout), so the fence pins report-scale rows, never the
     // corpus; MEMORY_AND_DISK spills rather than OOMs on pathological
-    // near-unique domains. One corpus pass by construction; the stats
-    // and offset jobs read materialized rows. [[
-    // countOverlapsFromHistogram]] deliberately does NOT checkpoint:
-    // its histogram input is already a persisted value-bounded table,
-    // re-reading it is as cheap as the checkpoint write (measured
-    // neutral on q156), and the serve plan keeps visibly scanning the
-    // histogram relation (the OperatorsSpec scan-absence gate).
-    // lazy (r21): the first consumer (the range-stats broadcast build)
-    // materializes the histogram; the offset and cascade reads hit
-    // blocks — one corpus pass, one fewer dedicated job.
+    // near-unique domains. [[countOverlapsFromHistogram]] deliberately
+    // does NOT fence: its histogram input is already a persisted
+    // value-bounded table, re-reading it is as cheap as the fence
+    // write (measured neutral on q156), and the serve plan keeps
+    // visibly scanning the histogram relation (the OperatorsSpec
+    // scan-absence gate).
     // The QUERY side is fenced too (r22): the cascade's three
     // consumers (range stats, bucket offsets, main cascade) each
     // re-scanned the left table and re-ran its ±1 endpoint explode —
     // two narrow rows per query row pin (the query batch, not the
-    // corpus; the corpus side stays value-bounded via the histogram),
-    // and the second and third passes read blocks. The SERVE path
+    // corpus; the corpus side stays value-bounded via the histogram).
+    // The SERVE path
     // ([[countOverlapsFromHistogram]]) is deliberately unchanged: its
     // plan keeps visibly scanning both relations (the OperatorsSpec
     // scan-absence gate).
-    cascadeCount(rh.localCheckpoint(eager = false),
-      lq.localCheckpoint(eager = false), leftKey)
+    cascadeCount(Checkpoints.lazyFence(rh), Checkpoints.lazyFence(lq),
+      leftKey)
   }
 
   /** The shared tail of the rank-form count: one side-tagged prefix-sum
@@ -385,7 +381,7 @@ object IntervalJoin {
     // QUERY side is fenced exactly as in [[countOverlaps]] (r22): the
     // cascade's three consumers otherwise re-scan the batch and re-run
     // its ±1 endpoint explode per consumer.
-    cascadeCount(rh, lq.localCheckpoint(eager = false), leftKey)
+    cascadeCount(rh, Checkpoints.lazyFence(lq), leftKey)
   }
 
   private def requireIntegral(

@@ -4813,14 +4813,14 @@ object QueryPackExt {
       // against a live build plan that re-ran the lineitem endpoint
       // pass per reference (the exact duplication ddb732c closed for
       // q64's direct form; countOverlapsFromHistogram itself rightly
-      // never checkpoints, because a PRODUCTION serve reads a persisted
-      // table). The lazy checkpoint is the in-lineage stand-in for that
-      // persisted table: the first cascade consumer executes the build
-      // exactly once, inside the timed region — the row still measures
-      // build + serve, just not build × 3 + serve.
-      val hist = graft.operators.IntervalJoin.overlapHistogram(
-        transitIntervals(s, dir), "t_s", "t_e")
-        .localCheckpoint(eager = false)
+      // never fences, because a PRODUCTION serve reads a persisted
+      // table). The lazy fence is the in-lineage stand-in for that
+      // persisted table: the build executes exactly once, inside the
+      // timed region — the row still measures build + serve, just not
+      // build × 3 + serve.
+      val hist = graft.operators.Checkpoints.lazyFence(
+        graft.operators.IntervalJoin.overlapHistogram(
+          transitIntervals(s, dir), "t_s", "t_e"))
       graft.operators.IntervalJoin
         .countOverlapsFromHistogram(overlapWindows(s, dir), hist,
           "w_s", "w_e", leftKey = "w_key")

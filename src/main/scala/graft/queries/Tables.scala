@@ -11,6 +11,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * bench pays hundreds of times for identical answers. Keyed by
   * (session, path) so test suites with multiple sessions never share a
   * relation across sessions.
+  *
+  * Deliberately not a [[graft.operators.LruMemo]]: that memo bounds
+  * built artifacts to 8 entries, while these are unbounded plans, one
+  * per base table the session reads, evicted when the application
+  * ends.
   */
 private[queries] object Tables {
   private val cache = new ConcurrentHashMap[(SparkSession, String), DataFrame]()

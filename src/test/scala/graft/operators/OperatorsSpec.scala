@@ -10,21 +10,24 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
       "every partition; the frame survives its parent's release") {
     val s = spark
     import s.implicits._
-    // the contract the r21 checkpoint fusions rely on: a lazy
-    // localCheckpoint plus one full-partition action (an internal-row
-    // count) is equivalent to the eager form — the pipeline runs once,
-    // later consumers read blocks, and lineage is truncated so the
-    // frame stays readable after upstream blocks are dropped (the
-    // kcenter/keepFilter release ordering)
-    val parent = s.range(100).toDF("id").repartition(4)
-      .localCheckpoint(eager = false)
-    assert(parent.queryExecution.toRdd.count() === 100L)
-    val child = parent.filter(col("id") % 2 === 0)
-      .localCheckpoint(eager = false)
-    assert(child.queryExecution.toRdd.count() === 50L) // materializes child
-    Checkpoints.release(parent) // parent blocks dropped
-    assert(child.collect().length === 50) // child reads its own blocks
-    Checkpoints.release(child)
+    // the contract the lazy fences rely on: a lazy fence plus one
+    // full-partition action (an internal-row count) is equivalent to
+    // the eager form — the pipeline runs once, later consumers read
+    // blocks, and lineage is truncated so the frame stays readable
+    // after upstream blocks are dropped (the kcenter/keepFilter
+    // release ordering)
+    val floor = s.sparkContext.emptyRDD[Int].id
+    def pinned = s.sparkContext.getPersistentRDDs.keys.count(_ > floor)
+    Checkpoints.scoped { sc =>
+      val parent = sc.lazyFence(s.range(100).toDF("id").repartition(4))
+      assert(parent.queryExecution.toRdd.count() === 100L)
+      val child = sc.lazyFence(parent.filter(col("id") % 2 === 0))
+      assert(child.queryExecution.toRdd.count() === 50L) // materializes child
+      assert(pinned === 2)
+      sc.release(parent) // parent blocks dropped
+      assert(pinned === 1)
+      assert(child.collect().length === 50) // child reads its own blocks
+    }
   }
 
   test("asof join: latest right row at-or-before, inclusive, null when none") {

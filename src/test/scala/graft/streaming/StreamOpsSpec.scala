@@ -515,7 +515,8 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
     graft.llm.Hnsw.writeHnswIndex(
       graft.llm.Hnsw.hnswIndex(emb.repartition(3), m = 8, efConstruction = 64),
       dir)
-    val index = graft.llm.Hnsw.readHnswIndex(s, dir).localCheckpoint()
+    val index =
+      graft.operators.Checkpoints.fence(graft.llm.Hnsw.readHnswIndex(s, dir))
     val queryRows = emb.filter(col("vec_id") < 4)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       .as[(Long, Seq[Float])].collect()
