@@ -110,17 +110,12 @@ object EnaMain {
       idmapping: DataFrame,
       maxRows: Long,
       maxBytes: Long = 256L << 20): Boolean =
-    if (graft.Regimes.forceDistributed) {
-      // oracle runs certifying the 100 TB plan: always shuffle-resolve
-      false
-    } else if (maxRows >= Int.MaxValue) {
-      // limit() can't probe past Int.MaxValue, and a threshold that
-      // size means billions of driver-collected rows anyway — take the
-      // regime that is safe regardless of the true count
-      false
-    } else {
+    // forced oracle runs certify the 100 TB plan: always shuffle-resolve.
+    // A bound past Int.MaxValue means billions of driver-collected rows
+    // anyway, so the probe takes the regime that is safe regardless.
+    graft.Regimes.small(graft.Regimes.firstRows(idmapping, maxRows).exists { first =>
       import org.apache.spark.sql.functions.{coalesce, count, lit, octet_length, sum}
-      val row = idmapping.limit(maxRows.toInt + 1)
+      val row = first
         .agg(
           count(lit(1)).as("n"),
           coalesce(sum(
@@ -131,7 +126,7 @@ object EnaMain {
       // ~2x for UTF-16 in-heap strings + ~48B/entry of headers and refs
       val estBytes = row.getLong(1) * 2 + n * 48
       n <= maxRows && estBytes <= maxBytes
-    }
+    })
 
   /** Resolved launch parameters from either argument form. */
   final case class Launch(

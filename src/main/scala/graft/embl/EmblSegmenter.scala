@@ -59,7 +59,7 @@ final case class LocusRow(
   * Input rows must be in file order within each file; Spark's
   * FileScanRDD reads packed files sequentially inside a partition and
   * gzip inputs are non-splittable, so `spark.read.text` +
-  * `input_file_name()` satisfies this by construction.
+  * `_metadata.file_path` satisfies this by construction.
   *
   * Memory is O(one record's loci), matching the reference's streaming
   * profile — nothing holds a whole file.

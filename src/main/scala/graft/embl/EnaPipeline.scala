@@ -30,6 +30,22 @@ object EnaPipeline {
     */
   val DivisionTokenRegex = "_(ENV|PRO|FUN|PHG)_"
 
+  /** The S3 prune on a path (the `embl` source's listing filter).
+    * Reference semantics (dask_tasks.py:82-85): only files whose
+    * DIRECTORY path contains "sequence" are division-pruned.
+    */
+  def keptByPrune(path: String): Boolean =
+    !path.matches(".*sequence.*/.*") || DivisionTokenRegex.r.findFirstIn(path).isDefined
+
+  /** [[keptByPrune]] on a file source's `_metadata.file_path`: Spark
+    * applies a filter on file metadata when it lists the files, so a
+    * pruned file is never opened or gunzipped.
+    */
+  def keptFile: Column = {
+    val path = col("_metadata.file_path")
+    !path.rlike("sequence.*/") || path.rlike(DivisionTokenRegex)
+  }
+
   /** X11 (dask_tasks.py:138-154): derive the output-layout division from
     * the source path: `.../wgs/public/wds/x.dat.gz` -> `wgs-public-wds`,
     * `.../sequence/con/x.dat.gz` -> `sequence-con`.
@@ -73,16 +89,9 @@ object EnaPipeline {
       .option("recursiveFileLookup", "true")
       .option("pathGlobFilter", "*.dat.gz")
       .text(roots: _*)
-      .select(input_file_name().as("file_path"), col("value"))
-    val pruned =
-      if (applyDivisionPrune)
-        // reference semantics (dask_tasks.py:82-85): only files whose
-        // DIRECTORY path contains "sequence" are division-pruned
-        text.filter(
-          !col("file_path").rlike("sequence.*/") ||
-            col("file_path").rlike(DivisionTokenRegex))
-      else text
-    segmentLines(spark, pruned, metrics)
+    val pruned = if (applyDivisionPrune) text.filter(keptFile) else text
+    segmentLines(spark,
+      pruned.select(col("_metadata.file_path").as("file_path"), col("value")), metrics)
   }
 
   /** S5 proper: ordered `(file_path, value)` lines -> loci. Exposed
@@ -121,7 +130,7 @@ object EnaPipeline {
     // forced oracle runs pin the shuffle regime — the true-UniProt
     // (~1e9 mapping rows) plan — regardless of the caller's choice
     val resolved =
-      if (broadcastIdMap && !graft.Regimes.forceDistributed) {
+      if (graft.Regimes.small(broadcastIdMap)) {
         // Broadcast regime: ship the aggregated foreign_id -> ids map to
         // every executor and resolve each locus's protein_ids per-row —
         // a map-side hash join with NO explode / join / regroup. The

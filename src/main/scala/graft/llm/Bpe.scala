@@ -312,23 +312,21 @@ object Bpe {
     val hist = docs
       .select(explode(TextFns.regexTokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
-    val effMax =
-      if (graft.Regimes.forceDistributed) 0 else maxDriverVocab
-    val probe =
-      if (effMax > 0) hist.limit(effMax + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
+    val effMax = graft.Regimes.cap(maxDriverVocab)
     // byte cap as well as row cap (the keepFilter/J1 convention): the
     // driver loop holds every word EXPLODED to per-char pieces, so a
     // corpus of pathological unbroken letter runs must route to the
     // distributed loop rather than OOM the driver. ~64 B/char covers
     // the piece-string and vector overhead.
-    def histBytes: Long = probe.foldLeft(0L)(
-      (acc, r) => acc + 64L * r.getString(0).length + 48L)
-    if (effMax > 0 && probe.length <= effMax &&
-        histBytes <= MaxDriverHistBytes)
-      trainOnHist(probe.map(r => (r.getString(0), r.getLong(1))),
-        nMerges, minPairCount)
-    else trainDistributed(docs.sparkSession, hist, nMerges, minPairCount)
+    graft.Regimes.firstRows(hist, effMax).map(_.collect()).filter { rows =>
+      rows.length <= effMax && rows.foldLeft(0L)(
+        (acc, r) => acc + 64L * r.getString(0).length + 48L) <= MaxDriverHistBytes
+    } match {
+      case Some(rows) =>
+        trainOnHist(rows.map(r => (r.getString(0), r.getLong(1))),
+          nMerges, minPairCount)
+      case None => trainDistributed(docs.sparkSession, hist, nMerges, minPairCount)
+    }
   }
 
   /** Estimated in-driver footprint cap for the training histogram

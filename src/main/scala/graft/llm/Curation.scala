@@ -89,12 +89,11 @@ object Curation {
 
   /** Above this keep-list size the stage barrier broadcast-joins; at
     * or below (and under [[InlineKeepListMaxBytes]]), the ids inline
-    * as one InSet filter. [[graft.Regimes.forceDistributed]] pins the
-    * barrier to the broadcast-join form so the oracle gate can certify
-    * the 100 TB plan.
+    * as one InSet filter. [[keepFilter]] pins the barrier to the
+    * broadcast-join form under [[graft.Regimes.cap]] so the oracle
+    * gate can certify the 100 TB plan.
     */
-  private def InlineKeepListMax: Int =
-    if (graft.Regimes.forceDistributed) 0 else 100000
+  private val InlineKeepListMax = 100000
 
   /** Byte cap on the inlined id list (r13, the ENA broadcast-regime
     * octet-probe convention): [[InlineKeepListMax]] alone is a ROW
@@ -122,9 +121,9 @@ object Curation {
     */
   private def keepFilter(
       corpus: DataFrame, keepIds: DataFrame, maxInline: Int): DataFrame = {
-    // enforced here as well as in the default, so explicit caller
-    // values cannot re-enable the inline cut in forced oracle runs
-    val effMax = if (graft.Regimes.forceDistributed) 0 else maxInline
+    // pinned here, so explicit caller values cannot re-enable the
+    // inline cut in forced oracle runs
+    val effMax = graft.Regimes.cap(maxInline)
     // lazy fence + ONE probe job: the inline regime pays one driver
     // round trip per barrier, the overflow regime none (the join's
     // first consumer materializes); the stage pipeline still executes
@@ -240,7 +239,7 @@ object Curation {
     * a single fused-alternation regex ([[Pii.AnyRe]]), and the
     * contamination verdict is a per-row projection over the in-row
     * distinct gram array probed against the memoized exact eval-gram
-    * count map ([[Decontaminate.buildGramSetProbe]] — the gate re-runs
+    * count map ([[Decontaminate.gramSetProbe]] — the gate re-runs
     * per release against the same eval suite, so the build amortizes
     * to zero; values identical to the join form, the probe is exact).
     * Per distinct content: copies, token sum, pii hits, clean copies;
@@ -261,11 +260,8 @@ object Curation {
       maxOverlap: Double = 0.2): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val piiHit = when(col("text").rlike(Pii.AnyRe), 1L).otherwise(0L)
-    val probeName =
-      if (graft.Regimes.forceDistributed) Decontaminate.ProbeMemo.Negative
-      else Decontaminate.buildGramSetProbe(evalDocs, shingleK)
-    val stats =
-      if (probeName != Decontaminate.ProbeMemo.Negative) {
+    val stats = Decontaminate.gramSetProbe(evalDocs, shingleK) match {
+      case Some(probeName) =>
         val hit = (g: Column) => call_function(probeName, g) > 0
         val perRow = docs
           .select(col("text"), TextFns.tokenHashes(col("text")).as("hs"))
@@ -300,7 +296,7 @@ object Curation {
             count(when(col("__ch").isNotNull, 1))).as("n_dups"),
           coalesce(sum(col("__pii")), lit(0L)).as("n_pii_docs"),
           coalesce(sum(col("__clean")), lit(0L)).as("n_clean"))
-      } else {
+      case None =>
         val perContent = docs
           .groupBy(md5(col("text")).as("__ch"))
           .agg(

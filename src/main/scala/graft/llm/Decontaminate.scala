@@ -93,15 +93,14 @@ object Decontaminate {
     require(maxOverlap >= 0.0 && maxOverlap < 1.0,
       "maxOverlap must be in [0, 1)")
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val probeName =
-      if (graft.Regimes.forceDistributed) ProbeMemo.Negative
-      else buildGramSetProbe(evalDocs, shingleK)
-    if (probeName != ProbeMemo.Negative)
-      probeAuditKept(docs, shingleK,
-        gh => call_function(probeName, gh) > 0, maxOverlap)
-    else
-      decontaminateAudit(docs, evalDocs, shingleK)
-        .filter(col("overlap") <= maxOverlap)
+    gramSetProbe(evalDocs, shingleK) match {
+      case Some(probeName) =>
+        probeAuditKept(docs, shingleK,
+          gh => call_function(probeName, gh) > 0, maxOverlap)
+      case None =>
+        decontaminateAudit(docs, evalDocs, shingleK)
+          .filter(col("overlap") <= maxOverlap)
+    }
   }
 
   /** The unfiltered form of [[decontaminate]]: the same
@@ -129,17 +128,15 @@ object Decontaminate {
       evalDocs: DataFrame,
       shingleK: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val probeName =
-      if (graft.Regimes.forceDistributed) ProbeMemo.Negative
-      else buildGramSetProbe(evalDocs, shingleK)
-    if (probeName != ProbeMemo.Negative)
-      probeAudit(docs, shingleK,
-        gh => call_function(probeName, gh) > 0)
-    else
-      overlapFromGrams(
-        docs.select(col("doc_id")),
-        TextDedup.gramHashes(docs, shingleK).distinct(),
-        TextDedup.gramHashes(evalDocs, shingleK).select(col("gh")).distinct())
+    gramSetProbe(evalDocs, shingleK) match {
+      case Some(probeName) =>
+        probeAudit(docs, shingleK, gh => call_function(probeName, gh) > 0)
+      case None =>
+        overlapFromGrams(
+          docs.select(col("doc_id")),
+          TextDedup.gramHashes(docs, shingleK).distinct(),
+          TextDedup.gramHashes(evalDocs, shingleK).select(col("gh")).distinct())
+    }
   }
 
   /** Above this many distinct eval grams the exact membership map
@@ -155,36 +152,37 @@ object Decontaminate {
 
   /** Compile `evalDocs`' DISTINCT k-gram hashes into an exact
     * membership probe ([[graft.functions.LongCountMap]], count 1 per
-    * gram; absent → 0): returns the registered probe name, or
-    * [[ProbeMemo.Negative]] when the set exceeds `maxRows` (callers
-    * then take their join regime). Memoized per (plan, source
-    * fingerprint, bound) like every serve-many artifact — the filter
-    * builds once and every corpus/increment probed against the same
-    * unchanged eval set reuses it, including the oversized VERDICT
-    * itself (no repeated size probes — the r17 LM lesson).
+    * gram; absent → 0): returns the registered probe name, or None
+    * when the set exceeds `maxRows` or under the [[graft.Regimes]]
+    * pin (callers then take their join regime). Memoized per (plan,
+    * source fingerprint, bound) like every serve-many artifact — the
+    * filter builds once and every corpus/increment probed against the
+    * same unchanged eval set reuses it, including the oversized
+    * VERDICT itself (no repeated size probes — the r17 LM lesson).
     */
-  private[llm] def buildGramSetProbe(
+  private[llm] def gramSetProbe(
       evalDocs: DataFrame,
       shingleK: Int,
-      maxRows: Int = GramSetProbeMaxRows): String = {
-    val spark = evalDocs.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val grams = TextDedup.gramHashes(evalDocs, shingleK)
-      .select(col("gh")).distinct()
-    ProbeMemo.getOrBuild(spark, ("gramset",
-        grams.queryExecution.analyzed.canonicalized,
-        Similarity.sourceVersion(grams), maxRows)) {
-      Checkpoints.scoped { s =>
-        Checkpoints.probe(s.lazyFence(grams), maxRows) match {
-          case None => ProbeMemo.Negative
-          case Some(rows) =>
-            graft.functions.LongCountMap.registerProbe(spark,
-              spark.sparkContext.broadcast(graft.functions.LongCountMap.build(
-                rows.iterator.map(_.getLong(0) -> 1L), rows.length)))
+      maxRows: Int = GramSetProbeMaxRows): Option[String] =
+    graft.Regimes.unlessPinned {
+      val spark = evalDocs.sparkSession
+      graft.functions.GraftFunctions.ensureRegistered(spark)
+      val grams = TextDedup.gramHashes(evalDocs, shingleK)
+        .select(col("gh")).distinct()
+      ProbeMemo.getOrBuild(spark, ("gramset",
+          grams.queryExecution.analyzed.canonicalized,
+          Similarity.sourceVersion(grams), maxRows)) {
+        Checkpoints.scoped { s =>
+          Checkpoints.probe(s.lazyFence(grams), maxRows) match {
+            case None => ProbeMemo.Negative
+            case Some(rows) =>
+              graft.functions.LongCountMap.registerProbe(spark,
+                spark.sparkContext.broadcast(graft.functions.LongCountMap.build(
+                  rows.iterator.map(_.getLong(0) -> 1L), rows.length)))
+          }
         }
       }
-    }
-  }
+    }.filter(_ != ProbeMemo.Negative)
 
   /** The ZERO-SHUFFLE audit kernel: one row per doc with the standard
     * `(doc_id, n_grams, n_hit, overlap)` statistics, computed entirely
@@ -455,11 +453,8 @@ object Decontaminate {
     // A calibration runs on a SAMPLE by contract, so the eval set is
     // bounded in every real use; an oversized set (or the forced-
     // distributed certification) keeps the join form below.
-    val exactProbe =
-      if (graft.Regimes.forceDistributed) ProbeMemo.Negative
-      else buildGramSetProbe(evalDocs, shingleK)
-    val audited =
-      if (exactProbe != ProbeMemo.Negative) {
+    val audited = gramSetProbe(evalDocs, shingleK) match {
+      case Some(exactProbe) =>
         val exHit = (gh: Column) =>
           call_function(exactProbe, gh) > 0
         docs
@@ -477,7 +472,7 @@ object Decontaminate {
               .otherwise(col("n_hit").cast("double") / col("n_grams"))
               .as("overlap"),
             col("bloom_hit"))
-      } else {
+      case None =>
         val evalDistinct = TextDedup.gramHashes(evalDocs, shingleK)
           .select(col("gh")).distinct()
           .withColumn("ex", lit(1))

@@ -154,9 +154,8 @@ object LangModel {
     // the gate would silently keep everything) and through the lazy
     // vocab raise_error in the join regime.
     var spilled: Option[DataFrame] = None // oversized build -> join path
-    val memoed: String =
-      if (graft.Regimes.forceDistributed) Decontaminate.ProbeMemo.Negative
-      else Decontaminate.ProbeMemo.getOrBuild(spark, ("lmcountmap",
+    val probeName: Option[String] = graft.Regimes.unlessPinned(
+      Decontaminate.ProbeMemo.getOrBuild(spark, ("lmcountmap",
           modelFrame.queryExecution.analyzed.canonicalized,
           Similarity.sourceVersion(modelFrame), broadcastModelMaxRows)) {
         val ck = Checkpoints.lazyFence(modelFrame)
@@ -187,13 +186,11 @@ object LangModel {
               spark.sparkContext.broadcast(
                 graft.functions.LongCountMap.build(pairs, rows.length + 1)))
         }
-      }
-    val probeName: String =
-      if (memoed == Decontaminate.ProbeMemo.Negative) "" else memoed
+      }).filter(_ != Decontaminate.ProbeMemo.Negative)
 
-    val perDoc =
-      if (probeName.nonEmpty) {
-        val probe = (k: Column) => call_function(probeName, k)
+    val perDoc = probeName match {
+      case Some(name) =>
+        val probe = (k: Column) => call_function(name, k)
         val rareP = (lit(rarity) * (probe(col("bg")
             .bitwiseOR(lit(1L << 62))) + 1L)) <
           (probe(shiftright(col("bg"), 31)) + probe(lit(VocabKey)))
@@ -201,7 +198,7 @@ object LangModel {
           .select(col("doc_id"), when(rareP, 1L).otherwise(0L).as("__r"))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_bigrams"), sum(col("__r")).as("n_rare"))
-      } else {
+      case None =>
         val model = spilled.getOrElse(Checkpoints.fence(modelFrame))
         val trainUni = model.filter(col("t") === 0)
           .select(col("k").as("uh"), col("c").as("c_a"))

@@ -492,8 +492,8 @@ object TextAnalysis {
     * provably small, and to the fully-parallel
     * [[familiarityBucketsApprox]] past `maxExactRows` — the same
     * bounded-probe auto-fallback shape as the ENA broadcast regime
-    * (`EnaMain.chooseBroadcastRegime`): `limit(n+1).count()` reads at
-    * most n+1 rows, so the decision never scans the corpus. The exact
+    * (`EnaMain.chooseBroadcastRegime`): [[graft.Regimes.rowsFit]] reads
+    * at most n+1 rows, so the decision never scans the corpus. The exact
     * form stays what it was built to be — the oracle twin — without
     * being the default anyone runs at 100 TB.
     */
@@ -501,9 +501,7 @@ object TextAnalysis {
       docs: DataFrame,
       n: Int = 3,
       maxExactRows: Long = 2000000L): DataFrame =
-    if (maxExactRows < Int.MaxValue &&
-        docs.limit(maxExactRows.toInt + 1).count() <= maxExactRows)
-      familiarityBuckets(docs, n)
+    if (graft.Regimes.rowsFit(docs, maxExactRows)) familiarityBuckets(docs, n)
     else familiarityBucketsApprox(docs, n)
 
   /** BM25 keyword retrieval over the corpus for a literal term set —

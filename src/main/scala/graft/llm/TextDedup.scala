@@ -948,8 +948,7 @@ object TextDedup {
     require(maxIter > 0, "maxIter must be positive")
     require(escalateAfter > 0, "escalateAfter must be positive")
     lastStarRounds = 0
-    val smallMax =
-      if (graft.Regimes.forceDistributed) 0 else smallGraphMaxEdges
+    val smallMax = graft.Regimes.cap(smallGraphMaxEdges)
     Checkpoints.scoped { s =>
       // lazy: the probe below or the distributed loop's first round
       // reads the symmetric edge set in full
@@ -1057,15 +1056,12 @@ object TextDedup {
   }
 
   /** Default small-graph probe bound for [[duplicateComponents]]
-    * (~1e5 edges × 16 B — MBs on the driver).
-    * [[graft.Regimes.forceDistributed]] pins it to 0 so the oracle
-    * gate certifies the distributed loop — the 100 TB plan — and not
-    * just the driver union-find cut (also enforced inside the method,
-    * so explicit caller values cannot re-enable the fast path in
-    * forced runs).
+    * (~1e5 edges × 16 B — MBs on the driver). The method pins any
+    * bound to 0 under [[graft.Regimes.cap]], so the oracle gate
+    * certifies the distributed loop — the 100 TB plan — and not just
+    * the driver union-find cut, whatever the caller passes.
     */
-  def defaultSmallGraphMaxEdges: Int =
-    if (graft.Regimes.forceDistributed) 0 else 1 << 17
+  val defaultSmallGraphMaxEdges: Int = 1 << 17
 
   /** Diagnostics: star rounds the LAST [[duplicateComponents]] /
     * [[starComponents]] call spent when escalated (the driver
@@ -1255,10 +1251,7 @@ object TextDedup {
       // order-free integer arithmetic, zero iteration jobs (see
       // scaladoc). The probe job completes the fence either way, so the
       // distributed loop reads whole blocks.
-      val small =
-        if (graft.Regimes.forceDistributed) None
-        else Checkpoints.probe(p0, MaxDriverEdges.toLong)
-      small match {
+      graft.Regimes.unlessPinned(Checkpoints.probe(p0, MaxDriverEdges.toLong)).flatten match {
         case Some(rows) =>
           driverCentrality(pairs.sparkSession, rows, iters, initMass,
             dampNum, dampDen)

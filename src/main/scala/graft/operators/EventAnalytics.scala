@@ -127,13 +127,11 @@ object EventAnalytics {
     // the lag regime, and the row count rides along free to size the
     // median regime (the q50 dual: native buffering aggregate under
     // the bound, bounded-state histogram above it or forced)
-    val probe =
-      if (graft.Regimes.forceDistributed) None
-      else Some(events
-        .agg(min(col("ts")).cast("timestamp").as("lo"),
-          max(col("ts")).cast("timestamp").as("hi"),
-          count(col(valueCol)).as("nv"))
-        .head())
+    val probe = graft.Regimes.unlessPinned(events
+      .agg(min(col("ts")).cast("timestamp").as("lo"),
+        max(col("ts")).cast("timestamp").as("hi"),
+        count(col(valueCol)).as("nv"))
+      .head())
     val smallMedians = probe.exists(b =>
       !b.isNullAt(2) && b.getLong(2) <= MaxBufferedDriftRows)
     val q =
@@ -153,8 +151,8 @@ object EventAnalytics {
     // one probe job it has — but a sparse feed (years of retention,
     // a handful of populated windows) overshoots that bound without
     // having many windows, so the overshoot case re-checks the ACTUAL
-    // distinct win_start count under a bounded limit(n+1).count probe
-    // (the never-a-full-result convention) before paying the
+    // distinct win_start count under Regimes.rowsFit (the
+    // never-a-full-result convention) before paying the
     // distributed lag's extra stages. A duration string durationSeconds
     // doesn't know (Spark's window() grammar is wider) skips the span
     // shortcut and goes straight to the distinct probe — window()
@@ -168,11 +166,9 @@ object EventAnalytics {
             (b.getTimestamp(1).getTime - b.getTimestamp(0).getTime) / 1000.0
           spanSec / ws + 2.0 <= maxGlobalLagWindows.toDouble
         }
-        spanFits || {
-          val cap = math.min(maxGlobalLagWindows, Int.MaxValue.toLong - 1L)
-          w.select(col("win_start")).distinct()
-            .limit(cap.toInt + 1).count() <= cap
-        }
+        // a bound past the probe's range still probes at its largest
+        spanFits || graft.Regimes.rowsFit(w.select(col("win_start")).distinct(),
+          math.min(maxGlobalLagWindows, Int.MaxValue.toLong - 1L))
       }
     }
     val lagged =

@@ -21,10 +21,8 @@ import org.apache.spark.sql.functions._
   * `percentile_approx` (KLL-style sketch) remains the form for value
   * domains too large to histogram (continuous doubles at 100 TB):
   * bounded-memory sketches, rank error as the price. [[grouped]]
-  * switches on a bounded `limit(n+1).count()` probe — never a full
-  * scan — the same auto-fallback shape as
-  * `EnaMain.chooseBroadcastRegime` and
-  * `TextAnalysis.familiarityBucketsAuto`.
+  * switches on [[graft.Regimes.rowsFit]] — never a full scan — the
+  * same auto-fallback shape as `TextAnalysis.familiarityBucketsAuto`.
   */
 object Percentiles {
 
@@ -33,11 +31,10 @@ object Percentiles {
   /** Above this group count, groupedExactSelect's pass-2 bounds ship
     * as a broadcast lookup join instead of inline literal when-chains
     * (a G·P-conditional chain overruns codegen method limits).
-    * [[graft.Regimes.forceDistributed]] pins it to 0 so the oracle
-    * gate certifies the broadcast-lookup (scale) form.
+    * [[graft.Regimes.cap]] pins it to 0 so the oracle gate certifies
+    * the broadcast-lookup (scale) form.
     */
-  private def LitChainMaxGroups: Int =
-    if (graft.Regimes.forceDistributed) 0 else 64
+  private def LitChainMaxGroups: Int = graft.Regimes.cap(64)
 
   /** Exact interpolated percentiles from the value histogram — one row
     * per group: `p<NN>` per requested prob, plus `n`. NULL values are
@@ -77,40 +74,14 @@ object Percentiles {
     // Sentinel thresholds skip the probe JOB entirely — for callers
     // that already know their scale (the resolveBits "caller knows the
     // corpus" convention): <= 0 forces two-phase, >= Int.MaxValue
-    // forces single-window; anything between probes with a bounded
-    // limit+count (clamped before toInt so a large Long can't wrap
-    // negative into limit()).
-    // forceDistributed overrides even caller-pinned thresholds (q50
-    // pins Long.MaxValue as "caller knows the oracle SF"): the forced
-    // oracle run exists precisely to push the bit-identical TWO-PHASE
-    // form — the 100 TB plan — through the DuckDB gate.
-    val single =
-      if (graft.Regimes.forceDistributed) false
-      else if (twoPhaseThreshold <= 0L) false
-      else if (twoPhaseThreshold >= Int.MaxValue.toLong) true
-      else rows.limit(twoPhaseThreshold.toInt + 1).count() <= twoPhaseThreshold
-    groupedExactFromHist(hist, groupCol, valueCol, probs, single)
-  }
-
-  /** The histogram-input form of [[groupedExact]] (r13): callers that
-    * ALREADY hold a `(group, value, __c)` count frame — e.g. q49's
-    * fused sketch query, whose one corpus pass builds histograms for
-    * several kinds at once — interpolate from it directly, skipping
-    * the internal groupBy. `hist` must carry the count in a `__c`
-    * column and contain no NULL `valueCol` rows (SQL rank-space
-    * semantics are the caller's job here). Form choice is the
-    * caller's too ([[formSentinel]] for probing);
-    * [[graft.Regimes.forceDistributed]] still pins two-phase.
-    */
-  def groupedExactFromHist(
-      hist: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      probs: Seq[Double],
-      singleWindow: Boolean): DataFrame = {
-    require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
-      "probs must be within [0, 1]")
-    val single = singleWindow && !graft.Regimes.forceDistributed
+    // forces single-window; anything between probes with
+    // Regimes.rowsFit. The pin overrides even caller-pinned thresholds
+    // (q50 pins Long.MaxValue as "caller knows the oracle SF"): the
+    // forced oracle run exists precisely to push the bit-identical
+    // TWO-PHASE form — the 100 TB plan — through the DuckDB gate.
+    val single = graft.Regimes.small(
+      twoPhaseThreshold >= Int.MaxValue.toLong ||
+        graft.Regimes.rowsFit(rows, twoPhaseThreshold))
     val cum =
       if (single) {
         val byValue = Window.partitionBy(col(groupCol)).orderBy(col(valueCol))
@@ -161,8 +132,7 @@ object Percentiles {
   def formSentinel(cheap: DataFrame, twoPhaseThreshold: Long = 2000000L): Long =
     if (twoPhaseThreshold <= 0L || twoPhaseThreshold >= Int.MaxValue.toLong)
       twoPhaseThreshold
-    else if (cheap.limit(twoPhaseThreshold.toInt + 1).count() <= twoPhaseThreshold)
-      Long.MaxValue
+    else if (graft.Regimes.rowsFit(cheap, twoPhaseThreshold)) Long.MaxValue
     else 0L
 
   /** Exact interpolated percentiles by SKETCH-GUIDED BAND SELECTION —
@@ -432,9 +402,8 @@ object Percentiles {
       probs: Seq[Double] = Seq(0.5, 0.9),
       maxExactRows: Long = 2000000L,
       accuracy: Int = 10000): DataFrame = {
-    val exact = maxExactRows < Int.MaxValue &&
-      df.limit(maxExactRows.toInt + 1).count() <= maxExactRows
-    if (exact) groupedExact(df, groupCol, valueCol, probs)
+    if (graft.Regimes.rowsFit(df, maxExactRows))
+      groupedExact(df, groupCol, valueCol, probs)
     else groupedApprox(df, groupCol, valueCol, probs, accuracy)
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** THE two-phase distributed prefix-sum kernel — single home for the
   * decomposition that previously lived in three drifting copies
-  * (r14 VERDICT "what's wrong" #1): [[Percentiles.groupedExactFromHist]]'s
+  * (r14 VERDICT "what's wrong" #1): [[Percentiles.groupedExact]]'s
   * bucketed cumulative histogram, [[IntervalJoin.countOverlaps]]'s
   * threshold rank lookup, and the [[graft.llm.Packing.packBlocks]] /
   * [[graft.llm.Sampling.budgetSelect]] group-offset decomposition.

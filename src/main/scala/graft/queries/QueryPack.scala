@@ -31,7 +31,7 @@ object QueryPack {
     * comparison-sized, so the 1-partition sort is trivial; production
     * callers use the unsorted operator APIs directly.
     */
-  private implicit class HarnessOrdering(
+  private[queries] implicit class HarnessOrdering(
       private val df: org.apache.spark.sql.DataFrame) {
     def harnessSorted(cols: org.apache.spark.sql.Column*)
         : org.apache.spark.sql.DataFrame =
@@ -44,7 +44,7 @@ object QueryPack {
       fn: (SparkSession, String) => DataFrame,
       oracle: Option[String])
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
+  private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.parquet(s, s"$dir/$name.parquet")
 
   /** Normalize the events table's `ts` to a session-tz TIMESTAMP

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.embl.FlagshipFixture
 import graft.llm.{Pii, Similarity, TextAnalysis, TextDedup}
-import QueryPack.Q
+import QueryPack.{HarnessOrdering, Q, t}
 
 /** Extension-layer query pack: the LLM-data-pipeline operators (dedup /
   * similarity / text analysis / multimodal metadata) over the
@@ -24,21 +24,6 @@ import QueryPack.Q
   *    (DuckDB integer sum returns HUGEINT, the round-2 q23/q25 lesson).
   */
 object QueryPackExt {
-  /** Harness determinism sort (r8): same total order as orderBy, but
-    * via one exchange to a single partition + in-partition sort — no
-    * range-bounds sampling job, which re-executes the child plan and
-    * cost ~0.2 s per query across the suite. Oracle results are
-    * comparison-sized, so the 1-partition sort is trivial; production
-    * callers use the unsorted operator APIs directly.
-    */
-  private implicit class HarnessOrdering(
-      private val df: org.apache.spark.sql.DataFrame) {
-    def harnessSorted(cols: org.apache.spark.sql.Column*)
-        : org.apache.spark.sql.DataFrame =
-      df.repartition(1).sortWithinPartitions(cols: _*)
-  }
-
-
   /** Shared tokenization CTE — the exact mirror of
     * [[graft.llm.TextFns.tokens]].
     */
@@ -77,9 +62,6 @@ object QueryPackExt {
         SELECT doc_id, ${gramSqlExpr(k, graft.llm.TextFns.shingleCoef)} AS gh
         FROM tokh WINDOW win AS (PARTITION BY doc_id ORDER BY pos)),
       sh AS (SELECT DISTINCT doc_id, gh FROM grams WHERE gh IS NOT NULL)"""
-
-  private def t(s: org.apache.spark.sql.SparkSession, dir: String, name: String) =
-    Tables.parquet(s, s"$dir/$name.parquet")
 
   // ------------------------------------------------------------ dedup: exact
 
@@ -827,15 +809,10 @@ object QueryPackExt {
       // BYTES — one driver-side FS stat, free at any scale — because
       // scan cost is exactly what the cut trades on (a row-count
       // limit-probe measured as a full extra scan job per run at
-      // bench scale). forceDistributed pins fused so the oracle gate
+      // bench scale). The pin takes fused so the oracle gate
       // certifies the 100 TB plan.
-      val fused = graft.Regimes.forceDistributed || {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-        scala.util.Try(p.getFileSystem(s.sessionState.newHadoopConf())
-          .getContentSummary(p).getLength).getOrElse(Long.MaxValue) >
-          (128L << 20)
-      }
-      (if (fused) q49Fused(li) else q49Branched(li))
+      (if (graft.Regimes.smallTable(s, s"$dir/lineitem.parquet", 128L << 20))
+        q49Branched(li) else q49Fused(li))
         .harnessSorted(col("l_returnflag"))
     },
     Some("""
@@ -860,14 +837,8 @@ object QueryPackExt {
     (s, dir) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val li = t(s, dir, "lineitem")
-      val small = !graft.Regimes.forceDistributed && {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-        scala.util.Try(p.getFileSystem(s.sessionState.newHadoopConf())
-          .getContentSummary(p).getLength).getOrElse(Long.MaxValue) <=
-          (128L << 20)
-      }
       val q =
-        if (small)
+        if (graft.Regimes.smallTable(s, s"$dir/lineitem.parquet", 128L << 20))
           li.filter(col("l_extendedprice").isNotNull)
             .groupBy(col("l_returnflag"))
             .agg(
@@ -1087,14 +1058,8 @@ object QueryPackExt {
       // driver-side FS stat, no probe job): 16 MiB of orders parquet
       // ≈ 600k rows, past where the quadratic pair count outruns the
       // rank form's fixed stage cost
-      val usePair = !graft.Regimes.forceDistributed && {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/orders.parquet")
-        scala.util.Try(p.getFileSystem(s.sessionState.newHadoopConf())
-          .getContentSummary(p).getLength).getOrElse(Long.MaxValue) <=
-          (16L << 20)
-      }
       val counted =
-        if (usePair)
+        if (graft.Regimes.smallTable(s, s"$dir/orders.parquet", 16L << 20))
           graft.operators.IntervalJoin
             // caller-knows width: both sides are 8-day windows, so the
             // optimal w* = sqrt(8*8) = 8 — skips the derivedWidth

@@ -153,7 +153,6 @@ private[sources] class EmblScan(
     */
   override def planInputPartitions(): Array[InputPartition] = {
     val conf = SparkSession.active.sessionState.newHadoopConf()
-    val tokenRe = EnaPipeline.DivisionTokenRegex.r
     val files = roots.flatMap { root =>
       val p = new HPath(root)
       val fs = p.getFileSystem(conf)
@@ -165,8 +164,7 @@ private[sources] class EmblScan(
       buf.result()
         .map(_.getPath.toString)
         .filter(_.endsWith(".dat.gz"))
-        .filter(f => !divisionPrune ||
-          !f.matches(".*sequence.*/.*") || tokenRe.findFirstIn(f).isDefined)
+        .filter(f => !divisionPrune || EnaPipeline.keptByPrune(f))
         .filter(matchesPathFilters)
     }
     files.sorted.map(f => EmblInputPartition(f): InputPartition).toArray

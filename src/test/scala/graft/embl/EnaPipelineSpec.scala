@@ -109,6 +109,20 @@ class EnaPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(ids.contains("HUM01"))
   }
 
+  test("division prune drops files before they are read (input bytes)") {
+    import scala.jdk.CollectionConverters._
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".dat.gz")).toSeq
+    val (kept, pruned) = files.partition(f => EnaPipeline.keptByPrune(f.toUri.toString))
+    assert(pruned.nonEmpty, "fixture has no pruned file")
+    val (loci, _, tasks) = sparkEvents(EnaPipeline.readLoci(spark, Seq(root.toString)).collect())
+    assert(loci.nonEmpty)
+    val read = tasks.map(_.inputMetrics.bytesRead).sum
+    assert(read == kept.map(Files.size).sum,
+      s"read $read bytes; kept files hold ${kept.map(Files.size).sum}, " +
+        s"pruned ${pruned.map(Files.size).sum}")
+  }
+
   test("division derivation (X11) and TSV sink layout (S9/S10)") {
     import org.apache.spark.sql.functions.col
     val out = EnaPipeline.enaTab(spark, Seq(root.toString), idmapping)

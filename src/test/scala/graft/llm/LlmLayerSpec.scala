@@ -188,9 +188,7 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
       .decontaminate(train, eval_, shingleK = 3, maxOverlap = 0.2)
       .orderBy(col("doc_id")).collect().toSeq.map(_.toSeq)
     val probe = run()
-    sys.props("spark.graft.forceDistributed") = "true"
-    val joined = try run()
-      finally sys.props.remove("spark.graft.forceDistributed")
+    val joined = forced { run() }
     assert(probe === joined)
     // the probe-regime keep rule must NOT be a Filter above the stats
     // projection: pushdown would substitute the whole tokenize+md5+
@@ -1442,12 +1440,18 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
     val d = (Seq.fill(10)("the") ++ Seq.fill(7)("thin") ++ Seq.fill(5)("ab"))
       .toDF("text")
     val driver = Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2)
-    val dist = {
-      sys.props("spark.graft.forceDistributed") = "true"
-      try Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2)
-      finally sys.props.remove("spark.graft.forceDistributed")
-    }
+    val dist = forced { Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2) }
     assert(driver.nonEmpty && dist == driver)
+  }
+
+  test("bpeTrain: maxDriverVocab = Int.MaxValue trains instead of overflowing the probe") {
+    val s0 = spark
+    import s0.implicits._
+    val d = (Seq.fill(10)("the") ++ Seq.fill(7)("thin") ++ Seq.fill(5)("ab"))
+      .toDF("text")
+    val driver = Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2)
+    assert(driver.nonEmpty && Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2,
+      maxDriverVocab = Int.MaxValue) == driver)
   }
 
   test("bpeTrain: non-BMP text splits by code point, regimes stay identical") {
@@ -1464,11 +1468,7 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
     val d = (Seq.fill(10)("the") ++ Seq.fill(8)("😀") ++
       Seq.fill(6)("thin")).toDF("text")
     val driver = Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2)
-    val dist = {
-      sys.props("spark.graft.forceDistributed") = "true"
-      try Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2)
-      finally sys.props.remove("spark.graft.forceDistributed")
-    }
+    val dist = forced { Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2) }
     assert(driver.nonEmpty && dist == driver)
     driver.foreach { case (a, b, _) =>
       assert((a + b).forall(_ < 0x80), s"non-ASCII rule leaked: ($a, $b)")
@@ -1497,11 +1497,8 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
     }
     s0.sparkContext.addSparkListener(listener)
     val dist =
-      try {
-        sys.props("spark.graft.forceDistributed") = "true"
-        try Bpe.bpeTrain(d, nMerges = 18, minPairCount = 2)
-        finally sys.props.remove("spark.graft.forceDistributed")
-      } finally {
+      try forced { Bpe.bpeTrain(d, nMerges = 18, minPairCount = 2) }
+      finally {
         // async listener bus: undercounting only loosens the < bound
         s0.sparkContext.removeSparkListener(listener)
       }
@@ -1523,11 +1520,7 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
     // and batched-distributed must agree exactly.
     val d = (Seq.fill(10)("aab") ++ Seq.fill(10)("cd")).toDF("text")
     val driver = Bpe.bpeTrain(d, nMerges = 4, minPairCount = 2)
-    val dist = {
-      sys.props("spark.graft.forceDistributed") = "true"
-      try Bpe.bpeTrain(d, nMerges = 4, minPairCount = 2)
-      finally sys.props.remove("spark.graft.forceDistributed")
-    }
+    val dist = forced { Bpe.bpeTrain(d, nMerges = 4, minPairCount = 2) }
     assert(driver == Seq(("a", "a", 10L), ("aa", "b", 10L), ("c", "d", 10L)))
     assert(dist == driver)
     // round 1: {(a,a)} (tie-truncated); round 2: {(aa,b),(c,d)} (now

@@ -1,9 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkSpec
@@ -11,34 +8,10 @@ import graft.llm.TextDedup
 
 class CheckpointsSpec extends AnyFunSuite with SparkSpec {
 
-  /** Jobs (their stage names) and summed task result bytes of `body`.
-    * A marker job fences the async listener bus: its start event
-    * arrives after every event of the jobs `body` ran. */
+  /** Jobs (their stage names) and summed task result bytes of `body`. */
   private def observe[A](body: => A): (A, Seq[String], Long) = {
-    val sc = spark.sparkContext
-    val marker = s"checkpoints-spec-${System.nanoTime()}"
-    val jobs = new ConcurrentLinkedQueue[String]()
-    val bytes = new AtomicLong
-    val seen = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (marker == j.properties.getProperty("spark.job.description"))
-          seen.countDown()
-        else if (seen.getCount > 0)
-          jobs.add(j.stageInfos.map(_.name).mkString(";"))
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (seen.getCount > 0 && t.taskMetrics != null)
-          bytes.addAndGet(t.taskMetrics.resultSize)
-    }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      assert(seen.await(60, TimeUnit.SECONDS), "listener bus did not drain")
-      (out, jobs.asScala.toSeq, bytes.get)
-    } finally sc.removeSparkListener(l)
+    val (out, jobs, tasks) = sparkEvents(body)
+    (out, jobs.map(_.stageInfos.map(_.name).mkString(";")), tasks.map(_.resultSize).sum)
   }
 
   /** Persistent RDDs created after the call that returned `floor`.
@@ -47,11 +20,6 @@ class CheckpointsSpec extends AnyFunSuite with SparkSpec {
   private def floor: Int = spark.sparkContext.emptyRDD[Int].id
   private def pinnedSince(floor: Int): Int =
     spark.sparkContext.getPersistentRDDs.keys.count(_ > floor)
-
-  private def forced[A](body: => A): A = {
-    sys.props("spark.graft.forceDistributed") = "true"
-    try body finally sys.props.remove("spark.graft.forceDistributed")
-  }
 
   private val probeJob = "(^|;)(collect|runJob) at Checkpoints\\.scala".r
 

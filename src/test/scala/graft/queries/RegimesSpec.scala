@@ -18,11 +18,6 @@ class RegimesSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def forced[A](body: => A): A = {
-    sys.props("spark.graft.forceDistributed") = "true"
-    try body finally sys.props.remove("spark.graft.forceDistributed")
-  }
-
   private def rows(name: String): Seq[Seq[Any]] =
     QueryPackExt.queries(name)(spark, sf).collect().toSeq.map(_.toSeq)
 
@@ -109,6 +104,74 @@ class RegimesSpec extends AnyFunSuite with SparkSpec {
     assert(byId(1L) == 7L, s"leaf mass ${byId(1L)}")
     assert(default.count(_._1 > 0) == 50 && default.forall(r =>
       if (r._1 == 0L) r._3 == 50L else r._3 == 1L))
+  }
+
+  test("q49 sketches: forced fused form is value-identical to the branched form") {
+    assert(forced { rows("q49_approx_sketches") } == rows("q49_approx_sketches"))
+  }
+
+  test("q58 interval join: forced rank form − 1 is value-identical to the pair join") {
+    val default = rows("q58_interval_join")
+    assert(default.nonEmpty)
+    assert(forced { rows("q58_interval_join") } == default)
+  }
+
+  /** `body`'s result and the number of jobs it started. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    val (out, jobs, _) = sparkEvents(body)
+    (out, jobs.size)
+  }
+
+  test("rowsFit: a bounded probe inside the bound, no job outside it") {
+    val df = spark.range(0, 5).toDF("id")
+    val (fits, jobs) = jobsOf(graft.Regimes.rowsFit(df, 5))
+    assert(fits && jobs > 0)
+    assert(!graft.Regimes.rowsFit(df, 4))
+    assert(graft.Regimes.firstRows(df, Int.MaxValue - 1L).isDefined)
+    for (n <- Seq(Long.MinValue, -1L, 0L, Int.MaxValue.toLong, Long.MaxValue)) {
+      assert(graft.Regimes.firstRows(df, n).isEmpty, s"bound $n reached limit")
+      assert(jobsOf(graft.Regimes.rowsFit(df, n)) == ((false, 0)), s"bound $n")
+    }
+  }
+
+  test("smallTable: file bytes pick the form; a missing path or the pin picks the large form") {
+    val path = s"$sf/orders.parquet"
+    assert(graft.Regimes.smallTable(spark, path, 16L << 20))
+    assert(!graft.Regimes.smallTable(spark, path, 1L))
+    assert(!graft.Regimes.smallTable(spark, s"$sf/no_such_table.parquet", Long.MaxValue))
+    forced { assert(!graft.Regimes.smallTable(spark, path, Long.MaxValue)) }
+  }
+
+  test("the pin leaves a small-form probe unevaluated") {
+    var probed = 0
+    def probe = { probed += 1; true }
+    assert(graft.Regimes.small(probe) && graft.Regimes.unlessPinned(probe).contains(true))
+    assert(graft.Regimes.cap(64) == 64)
+    forced {
+      assert(!graft.Regimes.small(probe) && graft.Regimes.unlessPinned(probe).isEmpty)
+      assert(graft.Regimes.cap(64) == 0)
+    }
+    assert(probed == 2)
+  }
+
+  test("only Regimes chooses: no flag read, file-bytes stat or hand-written row probe elsewhere in src/main") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"scanned only ${files.size} files under $root")
+    val handProbe = """\.limit\([^)]*\+\s*1\)""".r
+    val offenders = for {
+      f <- files
+      name = root.relativize(f).toString if name != "graft/Regimes.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim.replaceAll("//.*", "")
+      if !code.startsWith("*") && !code.startsWith("/*")
+      // Verify's banner reports the pin; it chooses nothing
+      if (code.contains("forceDistributed") && name != "graft/Verify.scala") ||
+        code.contains("getContentSummary") || handProbe.findFirstIn(code).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("chooseBroadcastRegime always shuffles when forced") {
